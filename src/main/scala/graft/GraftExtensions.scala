@@ -9,18 +9,15 @@ import graft.functions.GraftFunctions
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   *
-  * Builtins are never shadowed: descriptors are injected only for
-  * names Spark does not define (injectFunction would otherwise replace
-  * them for the session).
+  * Functions are injected under the same rule ensureRegistered
+  * applies (GraftFunctions.installed): names Spark already defines keep
+  * Spark's builder, except the few whose dialect semantics differ
+  * (`median`, the bounded reservoir), which are replaced from the
+  * session's first statement.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-    GraftFunctions.descriptors
-      .filterNot { case (id, _, _) =>
-        FunctionRegistry.builtin.functionExists(id)
-      }
-      .foreach(ext.injectFunction)
+    GraftFunctions.installed.foreach(ext.injectFunction)
     // projection auto-selection: matching aggregates over a table with
     // a declared PROJECTION read the materialized summary instead
     ext.injectOptimizerRule(session => graft.plans.ProjectionRewrite(session))

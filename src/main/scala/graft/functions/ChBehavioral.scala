@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
+import FnBuilders.{bind, builtin, elemAt, fld, fresh, wrapAgg}
 
 /** SQL surface for the reference's behavioral PARAMETRIC aggregates —
   * windowFunnel / retention / sequenceMatch / sequenceCount callable
@@ -29,21 +29,6 @@ import org.apache.spark.sql.types._
   */
 private[graft] object ChBehavioral {
 
-  private def fresh(n: String): UnresolvedNamedLambdaVariable =
-    UnresolvedNamedLambdaVariable(Seq(
-      UnresolvedNamedLambdaVariable.freshVarName(n)))
-
-  private def wrapAgg(e: Expression, filter: Option[Expression] = None): Expression = e match {
-    case af: aggregate.AggregateFunction =>
-      af.toAggregateExpression(isDistinct = false, filter = filter)
-    case other => other
-  }
-
-  private def fld(e: Expression, f: String): Expression =
-    UnresolvedExtractValue(e, Literal(f))
-  private def elem(a: Expression, i: Expression): Expression =
-    ChDialect.builtin("element_at")(Seq(a, i))
-
   /** The group's condition-relevant events as a time-sorted struct
     * array (t: epoch-µs, ord: inverted flags so same-t events fold
     * lower-cond-first, ms: per-cond flags) — the aggregate-expression
@@ -60,29 +45,29 @@ private[graft] object ChBehavioral {
       keepAll: Boolean = false): Expression = {
     val ms = CreateArray(conds.map(c => Cast(c, BooleanType)))
     val mv = fresh("m")
-    val ord = ChDialect.builtin("transform")(
+    val ord = builtin("transform")(
       Seq(ms, LambdaFunction(Not(mv), Seq(mv))))
     val entry = CreateNamedStruct(Seq(
-      Literal("t"), ChDialect.builtin("unix_micros")(Seq(ts)),
+      Literal("t"), builtin("unix_micros")(Seq(ts)),
       Literal("ord"), ord,
       Literal("ms"), ms))
     val hv = fresh("h")
-    val anyCond = ChDialect.builtin("exists")(
+    val anyCond = builtin("exists")(
       Seq(ms, LambdaFunction(hv, Seq(hv))))
     // strict_order funnels keep condition-less events (they interrupt)
     val filt = if (keepAll) None else Some(anyCond)
-    ChDialect.builtin("sort_array")(
-      Seq(wrapAgg(ChDialect.builtin("collect_list")(Seq(entry)),
+    builtin("sort_array")(
+      Seq(wrapAgg(builtin("collect_list")(Seq(entry)),
         filter = filt)))
   }
 
   private def nullLongs(n: Int): Expression =
-    ChDialect.builtin("array_repeat")(
+    builtin("array_repeat")(
       Seq(Cast(Literal(null), LongType), Literal(n)))
 
   private def levelOf(acc: Expression): Expression = {
     val x = fresh("x")
-    ChDialect.builtin("size")(Seq(ChDialect.builtin("filter")(
+    builtin("size")(Seq(builtin("filter")(
       Seq(acc, LambdaFunction(IsNotNull(x), Seq(x))))))
   }
 
@@ -90,14 +75,14 @@ private[graft] object ChBehavioral {
       body: (Expression, Expression) => Expression): Expression = {
     val acc = fresh("acc")
     val e = fresh("e")
-    ChDialect.builtin("aggregate")(
+    builtin("aggregate")(
       Seq(evs, init, LambdaFunction(body(acc, e), Seq(acc, e))))
   }
 
   private def perLevelK(n: Int)(body: Expression => Expression): Expression = {
     val k = fresh("k")
-    ChDialect.builtin("transform")(Seq(
-      ChDialect.builtin("sequence")(Seq(Literal(0), Literal(n - 1))),
+    builtin("transform")(Seq(
+      builtin("sequence")(Seq(Literal(0), Literal(n - 1))),
       LambdaFunction(body(k), Seq(k))))
   }
 
@@ -116,9 +101,9 @@ private[graft] object ChBehavioral {
       val folded = fold(packedAgg(ts, conds), nullLongs(n)) { (acc, e) =>
         perLevelK(n) { k =>
           val t = fld(e, "t")
-          val hit = elem(fld(e, "ms"), Add(k, Literal(1)))
-          val prev = elem(acc, k)
-          val cur = elem(acc, Add(k, Literal(1)))
+          val hit = elemAt(fld(e, "ms"), Add(k, Literal(1)))
+          val prev = elemAt(acc, k)
+          val cur = elemAt(acc, Add(k, Literal(1)))
           If(EqualTo(k, Literal(0)),
             If(hit, Greatest(Seq(cur, t)), cur),
             If(And(And(hit, IsNotNull(prev)),
@@ -132,7 +117,7 @@ private[graft] object ChBehavioral {
     val strictDedup = modes("strict_deduplication")
     val strictInc = modes("strict_increase")
     val nullL = Cast(Literal(null), LongType)
-    val initLv = ChDialect.builtin("array_repeat")(Seq(
+    val initLv = builtin("array_repeat")(Seq(
       CreateNamedStruct(Seq(Literal("sA"), nullL, Literal("lA"), nullL,
         Literal("sB"), nullL)),
       Literal(n)))
@@ -142,8 +127,8 @@ private[graft] object ChBehavioral {
       if (n == 1) Literal(false)
       else {
         val k = fresh("k")
-        ChDialect.builtin("exists")(Seq(
-          ChDialect.builtin("sequence")(Seq(Literal(1), Literal(n - 1))),
+        builtin("exists")(Seq(
+          builtin("sequence")(Seq(Literal(1), Literal(n - 1))),
           LambdaFunction(body(k), Seq(k))))
       }
     val folded = fold(packedAgg(ts, conds, keepAll = strictOrder), init) {
@@ -151,14 +136,14 @@ private[graft] object ChBehavioral {
         val t = fld(e, "t")
         val ms = fld(e, "ms")
         val lv = fld(acc, "lv")
-        val started = IsNotNull(fld(elem(lv, Literal(1)), "sA"))
+        val started = IsNotNull(fld(elemAt(lv, Literal(1)), "sA"))
         val hv = fresh("h")
-        val anyHit = ChDialect.builtin("exists")(
+        val anyHit = builtin("exists")(
           Seq(ms, LambdaFunction(hv, Seq(hv))))
-        val outOfOrder = overUpper(k => And(elem(ms, Add(k, Literal(1))),
-          IsNull(fld(elem(lv, k), "sA"))))
-        val dup = overUpper(k => And(elem(ms, Add(k, Literal(1))),
-          IsNotNull(fld(elem(lv, Add(k, Literal(1))), "sA"))))
+        val outOfOrder = overUpper(k => And(elemAt(ms, Add(k, Literal(1))),
+          IsNull(fld(elemAt(lv, k), "sA"))))
+        val dup = overUpper(k => And(elemAt(ms, Add(k, Literal(1))),
+          IsNotNull(fld(elemAt(lv, Add(k, Literal(1))), "sA"))))
         // coalesce: a null condition value must read as "no signal",
         // not poison the dead flag through three-valued Or
         val deadNow = Coalesce(Seq(Or(Or(fld(acc, "dead"),
@@ -166,11 +151,11 @@ private[graft] object ChBehavioral {
           else Literal(false)),
           if (strictDedup) dup else Literal(false)), Literal(false)))
         val newLv = If(deadNow, lv, perLevelK(n) { k =>
-          val hit = elem(ms, Add(k, Literal(1)))
-          val curP = elem(lv, Add(k, Literal(1)))
+          val hit = elemAt(ms, Add(k, Literal(1)))
+          val curP = elemAt(lv, Add(k, Literal(1)))
           val sA = fld(curP, "sA")
           val lA = fld(curP, "lA")
-          val prevP = elem(lv, k)
+          val prevP = elemAt(lv, k)
           val candUp =
             if (strictInc)
               If(LessThan(fld(prevP, "lA"), t),
@@ -190,14 +175,14 @@ private[graft] object ChBehavioral {
           Literal("lv"), newLv, Literal("dead"), deadNow))
     }
     val p = fresh("p")
-    ChDialect.builtin("size")(Seq(ChDialect.builtin("filter")(
+    builtin("size")(Seq(builtin("filter")(
       Seq(fld(folded, "lv"), LambdaFunction(IsNotNull(fld(p, "sA")), Seq(p))))))
   }
 
   /** retention(cond1 … condN) → array<int>, r(k) = c1 && ck. */
   def retention(conds: Seq[Expression]): Expression = {
     val flags = conds.map(c =>
-      wrapAgg(ChDialect.builtin("max")(Seq(Cast(c, IntegerType)))))
+      wrapAgg(builtin("max")(Seq(Cast(c, IntegerType)))))
     CreateArray(flags.head +: flags.tail.map(f => Multiply(flags.head, f)))
   }
 
@@ -267,16 +252,16 @@ private[graft] object ChBehavioral {
     val n = steps.size
     val (idxArr, gapArr) = stepArrays(steps)
     val nullL = Cast(Literal(null), LongType)
-    val init = ChDialect.builtin("array_repeat")(Seq(
+    val init = builtin("array_repeat")(Seq(
       CreateNamedStruct(Seq(Literal("l1"), nullL, Literal("l2"), nullL)),
       Literal(n)))
     val folded = fold(packedAgg(ts, conds), init) { (acc, e) =>
       perLevelK(n) { k =>
         val t = fld(e, "t")
-        val hit = elem(fld(e, "ms"), elem(idxArr, Add(k, Literal(1))))
-        val prevP = elem(acc, k)
-        val curP = elem(acc, Add(k, Literal(1)))
-        val gap = elem(gapArr, Add(k, Literal(1)))
+        val hit = elemAt(fld(e, "ms"), elemAt(idxArr, Add(k, Literal(1))))
+        val prevP = elemAt(acc, k)
+        val curP = elemAt(acc, Add(k, Literal(1)))
+        val gap = elemAt(gapArr, Add(k, Literal(1)))
         val cl1 = fld(curP, "l1")
         // latest level-k completion strictly before t (l2 < l1 ≤ t)
         val usable = If(LessThan(fld(prevP, "l1"), t),
@@ -292,7 +277,7 @@ private[graft] object ChBehavioral {
       }
     }
     val p = fresh("p")
-    val lvl = ChDialect.builtin("size")(Seq(ChDialect.builtin("filter")(
+    val lvl = builtin("size")(Seq(builtin("filter")(
       Seq(folded, LambdaFunction(IsNotNull(fld(p, "l1")), Seq(p))))))
     Cast(EqualTo(lvl, Literal(n)), IntegerType)
   }
@@ -371,23 +356,23 @@ private[graft] object ChBehavioral {
     val entry =
       if (sharable)
         CreateNamedStruct(Seq(
-          Literal("t"), ChDialect.builtin("unix_micros")(Seq(ts)),
+          Literal("t"), builtin("unix_micros")(Seq(ts)),
           Literal("evs"), Cast(event, StringType),
           Literal("ev"), event))
       else {
         val ms = CreateArray(conds.map(c =>
           Coalesce(Seq(Cast(c, BooleanType), Literal(false)))))
         CreateNamedStruct(Seq(
-          Literal("t"), ChDialect.builtin("unix_micros")(Seq(ts)),
+          Literal("t"), builtin("unix_micros")(Seq(ts)),
           Literal("ev"), Cast(event, StringType),
           Literal("bc"), Coalesce(Seq(Cast(baseCond, BooleanType),
             Literal(false))),
           Literal("ms"), ms))
       }
-    val collected = ChDialect.builtin("sort_array")(
-      Seq(wrapAgg(ChDialect.builtin("collect_list")(Seq(entry)))))
+    val collected = builtin("sort_array")(
+      Seq(wrapAgg(builtin("collect_list")(Seq(entry)))))
     val collectedArr = if (direction == "backward")
-      ChDialect.builtin("reverse")(Seq(collected)) else collected
+      builtin("reverse")(Seq(collected)) else collected
     // LET-BINDING (r13): the aggregate result projection is
     // interpreted (higher-order functions block codegen), so there is
     // NO common-subexpression elimination — splicing `collectedArr`
@@ -398,15 +383,15 @@ private[graft] object ChBehavioral {
     // so the candidate filter runs once, not once per reference.
     val arrVar = fresh("seqarr")
     def bodyOf(arr: Expression): Expression = {
-      val sz = ChDialect.builtin("size")(Seq(arr))
+      val sz = builtin("size")(Seq(arr))
       // 1-based anchor candidates; chain needs k consecutive events
       val idxs = If(GreaterThanOrEqual(sz, Literal(k)),
-        ChDialect.builtin("sequence")(
+        builtin("sequence")(
           Seq(Literal(1), Add(Subtract(sz, Literal(k)), Literal(1)))),
-        ChDialect.builtin("array_remove")(Seq(
-          ChDialect.builtin("array")(Seq(Literal(0))), Literal(0))))
+        builtin("array_remove")(Seq(
+          builtin("array")(Seq(Literal(0))), Literal(0))))
       val i = fresh("i")
-      def at(ix: Expression) = elem(arr, ix)
+      def at(ix: Expression) = elemAt(arr, ix)
       def asBool(e: Expression): Expression =
         Coalesce(Seq(Cast(e, BooleanType), Literal(false)))
       val (chainOk, baseOk) =
@@ -420,31 +405,31 @@ private[graft] object ChBehavioral {
           (chain, asBool(fs.head(fld(at(i), "ev"))))
         } else {
           val j = fresh("j")
-          val chain = ChDialect.builtin("forall")(Seq(
-            ChDialect.builtin("sequence")(Seq(Literal(0), Literal(k - 1))),
+          val chain = builtin("forall")(Seq(
+            builtin("sequence")(Seq(Literal(0), Literal(k - 1))),
             LambdaFunction(
-              elem(fld(at(Add(i, j)), "ms"), Add(j, Literal(1))), Seq(j))))
+              elemAt(fld(at(Add(i, j)), "ms"), Add(j, Literal(1))), Seq(j))))
           (chain, fld(at(i), "bc"))
         }
       val anchorOk = And(baseOk,
         if (anchored) EqualTo(i, Literal(1)) else Literal(true))
-      val valid = ChDialect.builtin("filter")(Seq(idxs,
+      val valid = builtin("filter")(Seq(idxs,
         LambdaFunction(And(anchorOk, chainOk), Seq(i))))
       val anchor =
-        if (base == "last_match") ChDialect.builtin("array_max")(Seq(valid))
-        else ChDialect.builtin("array_min")(Seq(valid))
+        if (base == "last_match") builtin("array_max")(Seq(valid))
+        else builtin("array_min")(Seq(valid))
       val av = fresh("anchor")
       def resultOf(a: Expression): Expression = {
         val nextIdx = Add(a, Literal(k))
         If(And(IsNotNull(a), LessThanOrEqual(nextIdx, sz)),
-          Cast(fld(elem(arr, nextIdx), "ev"), StringType),
+          Cast(fld(elemAt(arr, nextIdx), "ev"), StringType),
           Cast(Literal(null), StringType))
       }
-      elem(ChDialect.builtin("transform")(Seq(
+      elemAt(builtin("transform")(Seq(
         CreateArray(Seq(anchor)),
         LambdaFunction(resultOf(av), Seq(av)))), Literal(1))
     }
-    elem(ChDialect.builtin("transform")(Seq(
+    elemAt(builtin("transform")(Seq(
       CreateArray(Seq(collectedArr)),
       LambdaFunction(bodyOf(arrVar), Seq(arrVar)))), Literal(1))
   }
@@ -459,7 +444,7 @@ private[graft] object ChBehavioral {
     val steps = parsePattern(pattern, conds.size)
     val n = steps.size
     val (idxArr, gapArr) = stepArrays(steps)
-    val emptyTimes = ChDialect.builtin("array_remove")(Seq(
+    val emptyTimes = builtin("array_remove")(Seq(
       CreateArray(Seq(Literal(0L))), Literal(0L)))
     val init = CreateNamedStruct(Seq(
       Literal("lvl"), Literal(0),
@@ -472,14 +457,14 @@ private[graft] object ChBehavioral {
       val lt = fld(acc, "lt")
       val done = fld(acc, "done")
       val times = fld(acc, "ts")
-      val hit = elem(fld(e, "ms"), elem(idxArr, Add(lvl, Literal(1))))
-      val gap = elem(gapArr, Add(lvl, Literal(1)))
+      val hit = elemAt(fld(e, "ms"), elemAt(idxArr, Add(lvl, Literal(1))))
+      val gap = elemAt(gapArr, Add(lvl, Literal(1)))
       val timeOk = Or(EqualTo(lvl, Literal(0)),
         And(GreaterThan(t, lt),
           Or(IsNull(gap), LessThanOrEqual(Subtract(t, lt), gap))))
       val advance = And(Not(done), And(hit, timeOk))
       val newTimes = If(advance,
-        ChDialect.builtin("concat")(Seq(times, CreateArray(Seq(t)))),
+        builtin("concat")(Seq(times, CreateArray(Seq(t)))),
         times)
       val newLvl = If(advance, Add(lvl, Literal(1)), lvl)
       CreateNamedStruct(Seq(
@@ -490,16 +475,16 @@ private[graft] object ChBehavioral {
     }
     // bind the fold once: the If splices it twice (done + ts), and
     // interpreted projections re-run the whole fold per splice (r13)
-    ChStats.bind(folded) { f =>
+    bind(folded) { f =>
       val tv = fresh("t")
       val tv2 = fresh("t")
       If(fld(f, "done"),
-        ChDialect.builtin("transform")(Seq(fld(f, "ts"),
+        builtin("transform")(Seq(fld(f, "ts"),
           LambdaFunction(
-            ChDialect.builtin("timestamp_micros")(Seq(tv)), Seq(tv)))),
-        ChDialect.builtin("transform")(Seq(emptyTimes,
+            builtin("timestamp_micros")(Seq(tv)), Seq(tv)))),
+        builtin("transform")(Seq(emptyTimes,
           LambdaFunction(
-            ChDialect.builtin("timestamp_micros")(Seq(tv2)), Seq(tv2)))))
+            builtin("timestamp_micros")(Seq(tv2)), Seq(tv2)))))
     }
   }
 
@@ -519,8 +504,8 @@ private[graft] object ChBehavioral {
       val lvl = fld(acc, "lvl")
       val lt = fld(acc, "lt")
       val cnt = fld(acc, "cnt")
-      val hit = elem(fld(e, "ms"), elem(idxArr, Add(lvl, Literal(1))))
-      val gap = elem(gapArr, Add(lvl, Literal(1)))
+      val hit = elemAt(fld(e, "ms"), elemAt(idxArr, Add(lvl, Literal(1))))
+      val gap = elemAt(gapArr, Add(lvl, Literal(1)))
       val timeOk = Or(EqualTo(lvl, Literal(0)),
         And(GreaterThan(t, lt),
           Or(IsNull(gap), LessThanOrEqual(Subtract(t, lt), gap))))

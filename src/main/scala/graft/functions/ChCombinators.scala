@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, CollectList, CollectSet, Count, Max, Min, Sum}
 import org.apache.spark.sql.types._
+import FnBuilders.{Builder, builtin}
 
 /** ClickHouse aggregate-function COMBINATORS. The reference resolves
   * an aggregate call by peeling combinator suffixes off the name
@@ -33,19 +32,10 @@ import org.apache.spark.sql.types._
   */
 object ChCombinators {
 
-  private type Builder = Seq[Expression] => Expression
-
-  private def builtin(name: String): Builder = {
-    val b = FunctionRegistry.builtin
-      .lookupFunctionBuilder(FunctionIdentifier(name))
-      .getOrElse(throw new IllegalStateException(s"no builtin '$name'"))
-    exprs => b(exprs)
-  }
-
   private val nullL = Literal(null, NullType)
 
   /** Per-row double fold of an array — the -Array element reduction
-    * for sum/avg (same contract as ChDialect.arraySum). */
+    * for sum/avg (same contract as CollectionFns' arraySum). */
   private def foldSum(arr: Expression): Expression = {
     val acc = UnresolvedNamedLambdaVariable(Seq("acc"))
     val x = UnresolvedNamedLambdaVariable(Seq("x"))
@@ -126,7 +116,7 @@ object ChCombinators {
   private val distinctable = Set("sum", "avg", "count")
   private val defaultable =
     Set("sum", "count", "avg", "min", "max", "uniq", "uniqExact")
-  /** Names ChDialect defines by hand (kept there — identical semantics). */
+  /** Names StatFns defines by hand (kept there — identical semantics). */
   private val handWritten = Set("sumIf", "avgIf", "countIf", "minIf", "maxIf")
 
   /** name → builder for every generated combinator chain. */
@@ -152,10 +142,4 @@ object ChCombinators {
       .filterNot { case (n, _) => handWritten(n) }
       .distinctBy(_._1)
   }
-
-  lazy val descriptors: Seq[GraftFunctions.Descriptor] =
-    generated.map { case (name, builder) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo(classOf[ChCombinators.type].getName, name), builder)
-    }
 }

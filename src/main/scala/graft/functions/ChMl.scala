@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate
 import org.apache.spark.sql.types._
 
 /** ClickHouse's in-engine ML aggregates (reference:
@@ -47,25 +45,10 @@ import org.apache.spark.sql.types._
   * against the Cramer path and a hand solve.
   */
 private[graft] object ChMl {
-  import ChDialect.builtin
-
-  private def fld(e: Expression, f: String): Expression =
-    UnresolvedExtractValue(e, Literal(f))
-
-  private def wrapAgg(e: Expression): Expression = e match {
-    case af: aggregate.AggregateFunction => af.toAggregateExpression()
-    case other => other
-  }
+  import FnBuilders.{Ops, builtin, fld, wrapAgg}
 
   private def sumOf(e: Expression): Expression =
     wrapAgg(builtin("sum")(Seq(e)))
-
-  private implicit final class Ops(private val e: Expression) {
-    def +(o: Expression): Expression = Add(e, o)
-    def -(o: Expression): Expression = Subtract(e, o)
-    def *(o: Expression): Expression = Multiply(e, o)
-    def /(o: Expression): Expression = Divide(e, o)
-  }
 
   /** CH parametric calls arrive params-first through the ChSql
     * rewrite: up to four LEADING foldable literals are the

@@ -5,7 +5,7 @@ package graft.functions
   * prewhere() at :24, limitBy() at :30-32; ASTSampleRatio.h;
   * ASTTablesInSelectQuery.h:129 — array_join kinds Left/Inner;
   * ASTOrderByElement.h — with_fill + fill_from/fill_to/fill_step).
-  * Together with the ChDialect function registry this lets the
+  * Together with the GraftFunctions registry this lets the
   * reference's SQL run end-to-end: `spark.sql(ChSql.translate(ch))`.
   *
   * The input is TOKENIZED (words, numbers, quoted strings, operators,
@@ -854,7 +854,7 @@ object ChSql {
 
   /** ClickHouse PARAMETRIC aggregate syntax `f(params)(args)`
     * (reference: src/Parsers/ASTFunction.h — `parameters` next to
-    * `arguments`): folded into the single-call form the ChDialect
+    * `arguments`): folded into the single-call form the dialect
     * registry exposes. Per-name argument placement:
     *  - quantile family: `quantile(0.9)(x)` → `quantile(x, 0.9)`
     *    (the registered percentile-shaped order);

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedExtractValue}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Average, CollectList, CollectSet, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet, Count, Max, Min, Sum}
 import org.apache.spark.sql.types._
+import FnBuilders.{Builder, builtin, fld, wrapAgg}
 
 /** The -State / -Merge / -MergeState / -SimpleState aggregate
   * combinators — ClickHouse's two-level aggregation contract
@@ -36,27 +35,7 @@ import org.apache.spark.sql.types._
   */
 object ChStateMerge {
 
-  private type Builder = Seq[Expression] => Expression
-
-  private def builtin(name: String): Builder = {
-    val b = FunctionRegistry.builtin
-      .lookupFunctionBuilder(FunctionIdentifier(name))
-      .getOrElse(throw new IllegalStateException(s"no builtin '$name'"))
-    exprs => b(exprs)
-  }
-
   private val nullL = Literal(null, NullType)
-
-  /** Explicitly wrap any AggregateFunction — these trees nest
-    * aggregates under scalar expressions, where the analyzer's
-    * root-level auto-wrap does not reach. */
-  private def wrap(e: Expression): Expression = e match {
-    case af: AggregateFunction => af.toAggregateExpression()
-    case other => other
-  }
-
-  private def fld(e: Expression, f: String): Expression =
-    UnresolvedExtractValue(e, Literal(f))
 
   /** -If wrapping: off-predicate rows feed NULL into the (null-
     * skipping) state aggregate — identical to ChCombinators. */
@@ -69,55 +48,53 @@ object ChStateMerge {
       vals: Seq[Expression]): Expression = {
     val x = iff(cond, if (vals.isEmpty) Literal(1) else vals.head)
     base match {
-      case "sum"   => wrap(Sum(x))
-      case "count" => wrap(Count(Seq(x)))
-      case "min"   => wrap(Min(x))
-      case "max"   => wrap(Max(x))
+      case "sum"   => wrapAgg(Sum(x))
+      case "count" => wrapAgg(Count(Seq(x)))
+      case "min"   => wrapAgg(Min(x))
+      case "max"   => wrapAgg(Max(x))
       // (sum, count) pair; sum keeps the input's exact type (decimal
       // sums stay exact — addition-order independent)
       case "avg" => CreateNamedStruct(Seq(
-        Literal("s"), wrap(Sum(x)),
-        Literal("c"), wrap(Count(Seq(x)))))
+        Literal("s"), wrapAgg(Sum(x)),
+        Literal("c"), wrapAgg(Count(Seq(x)))))
       // Datasketches HLL binary — mergeable across groups
-      case "uniq" => wrap2(builtin("hll_sketch_agg")(Seq(x)))
-      case "uniqExact"      => wrap(CollectSet(x))
-      case "groupArray"     => wrap(CollectList(x))
-      case "groupUniqArray" => wrap(CollectSet(x))
+      case "uniq" => wrapAgg(builtin("hll_sketch_agg")(Seq(x)))
+      case "uniqExact"      => wrapAgg(CollectSet(x))
+      case "groupArray"     => wrapAgg(CollectList(x))
+      case "groupUniqArray" => wrapAgg(CollectSet(x))
     }
   }
-
-  private def wrap2(e: Expression): Expression = wrap(e)
 
   // ---- per-base Merge / MergeState builders ------------------------
 
   /** finalize=false keeps the result a STATE (-MergeState). */
   private def merge(base: String, st: Expression,
       finalize: Boolean): Expression = base match {
-    case "sum" => wrap(Sum(st))
+    case "sum" => wrapAgg(Sum(st))
     // merged count is a sum of partial counts; 0 (not NULL) over an
     // empty merge input, as CH
     case "count" =>
-      Coalesce(Seq(wrap(Sum(st)), Literal(0L)))
-    case "min" => wrap(Min(st))
-    case "max" => wrap(Max(st))
+      Coalesce(Seq(wrapAgg(Sum(st)), Literal(0L)))
+    case "min" => wrapAgg(Min(st))
+    case "max" => wrapAgg(Max(st))
     case "avg" =>
-      val s = wrap(Sum(fld(st, "s")))
-      val c = wrap(Sum(fld(st, "c")))
+      val s = wrapAgg(Sum(fld(st, "s")))
+      val c = wrapAgg(Sum(fld(st, "c")))
       if (!finalize) CreateNamedStruct(Seq(Literal("s"), s, Literal("c"), c))
       // one double division over exactly-merged sums — CH avg is Float64
       else Divide(Cast(s, DoubleType), Cast(c, DoubleType))
     case "uniq" =>
-      val u = wrap2(builtin("hll_union_agg")(Seq(st)))
+      val u = wrapAgg(builtin("hll_union_agg")(Seq(st)))
       if (!finalize) u else builtin("hll_sketch_estimate")(Seq(u))
     case "uniqExact" =>
       val els = builtin("array_distinct")(
-        Seq(builtin("flatten")(Seq(wrap(CollectList(st))))))
+        Seq(builtin("flatten")(Seq(wrapAgg(CollectList(st))))))
       if (!finalize) els else Cast(builtin("size")(Seq(els)), LongType)
     case "groupArray" =>
-      builtin("flatten")(Seq(wrap(CollectList(st))))
+      builtin("flatten")(Seq(wrapAgg(CollectList(st))))
     case "groupUniqArray" =>
       builtin("array_distinct")(
-        Seq(builtin("flatten")(Seq(wrap(CollectList(st))))))
+        Seq(builtin("flatten")(Seq(wrapAgg(CollectList(st))))))
   }
 
   private val bases = Seq("sum", "count", "min", "max", "avg", "uniq",
@@ -143,10 +120,4 @@ object ChStateMerge {
     }
     entries
   }
-
-  lazy val descriptors: Seq[GraftFunctions.Descriptor] =
-    generated.map { case (name, builder) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo(classOf[ChStateMerge.type].getName, name), builder)
-    }
 }

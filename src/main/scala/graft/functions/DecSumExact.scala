@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
 /** Exact decimal SUM with a two-tier accumulator (r19 verdict #9):
   * the hot tier is a plain LONG of unscaled units — Spark's own Sum
   * over an input wider than decimal(8,s) accumulates at precision
-  * p+10 > 18, i.e. a boxed BigDecimal add per row (the q01/y01 cost,
-  * Q01Probe) — and a cold decimal(38,s) tier absorbs the overflow
+  * p+10 > 18, i.e. a boxed BigDecimal add per row (the q01/y01 cost:
+  * 0.83 s of q01's ~1.0 s, OPTIMIZATION_r20.md §9) — and a cold
+  * decimal(38,s) tier absorbs the overflow
   * ESCAPE, so the exactness contract survives any row count:
   *
   *  - update: add the input's unscaled long into `accL`; iff the add

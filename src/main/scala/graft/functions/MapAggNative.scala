@@ -45,11 +45,8 @@ private[graft] object MapAggNative {
     * spellings) and `opForEach(arr)`. */
   lazy val descriptors: Seq[GraftFunctions.Descriptor] = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def builtin(name: String)(es: Seq[Expression]): Expression =
-      FunctionRegistry.builtin
-        .lookupFunctionBuilder(FunctionIdentifier(name)).get(es)
+    import FnBuilders.builtin
     ops.toSeq.flatMap { op =>
       val mapName = s"${op}Map"
       val feName = s"${op}ForEach"

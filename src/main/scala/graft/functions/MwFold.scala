@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Compiled kernel for the Mann-Whitney rank fold
-  * (ChStats.mannWhitneyUTest; reference
+  * (StatFns' mannWhitneyUTest; reference
   * AggregateFunctionMannWhitney.h semantics): one JVM loop over the
   * group's sorted (value, cohort) pairs instead of the interpreted
   * ArrayAggregate fold that allocated a 6-field accumulator struct

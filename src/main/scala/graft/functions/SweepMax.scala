@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Compiled kernel for the maxIntersections[Position] boundary sweep
-  * (ChStats.sweep; reference:
+  * (StatFns' sweep; reference:
   * AggregateFunctionMaxIntersections.h) — one JVM loop over the
   * sorted (point, ±1) boundary array instead of the interpreted
   * ArrayAggregate fold that allocated one accumulator struct per

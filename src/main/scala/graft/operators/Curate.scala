@@ -84,13 +84,14 @@ object Curate {
       // complete release (the dupClusters/semanticDedup discipline).
       val pairs = Dedup.ngramJaccard(keeperDocs, idCol, textCol, "predicted",
         n, minJaccard, maxGramDf)
-      val drop = pairs.select(col("id2").as(idCol)).distinct()
-      val res = exactMeta.join(broadcast(drop), Seq(idCol), "left_anti")
-        .select(col(idCol), col("predicted"), col("quality"), col("n_tokens"))
-        .persist()
-      res.count()
-      pairs.unpersist(blocking = false)
-      res
+      try {
+        val drop = pairs.select(col("id2").as(idCol)).distinct()
+        val res = exactMeta.join(broadcast(drop), Seq(idCol), "left_anti")
+          .select(col(idCol), col("predicted"), col("quality"), col("n_tokens"))
+          .persist()
+        res.count()
+        res
+      } finally pairs.unpersist(blocking = false)
     } finally scoredMeta.unpersist(blocking = false)
   }
 

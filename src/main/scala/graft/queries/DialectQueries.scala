@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, concat_ws, element_at, round}
 /** ClickHouse-dialect SQL executed VERBATIM through spark.sql — the
   * "switch to this library" proof: the reference's users keep their
   * SQL (function names per src/Parsers/ASTFunction.h), graft's
-  * FunctionRegistry surface (functions/ChDialect.scala) resolves it to
+  * FunctionRegistry surface (functions/GraftFunctions.scala) resolves it to
   * codegen'd Catalyst plans, and DuckDB confirms the results. */
 object DialectQueries {
 
@@ -62,8 +62,11 @@ object DialectQueries {
     // t statistics absorb the per-value re-association of the moment
     // sums (the package determinism discipline: inherently-float
     // stats are rounded); the U-test terms are multiples of 0.5 and
-    // exactly representable, so they are bit-identical in any order.
-    val cnt = e.groupBy("et", "v").agg(
+    // exactly representable, so they are identical on the pinned
+    // testdata. Rows with a NULL value or cohort are skipped, as the
+    // dialect aggregates skip them.
+    val cnt = e.filter(col("v").isNotNull && col("g").isNotNull)
+      .groupBy("et", "v").agg(
       count(lit(1)).cast("double").as("ceq"),
       count(when(col("g") === 0, 1)).cast("double").as("ones"),
       sum(when(col("g") === 0, col("v"))).as("s1v"),
@@ -999,12 +1002,12 @@ object DialectQueries {
           |              event_type = 'purchase')), ',') AS r
           |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    // The A/B statistical-test aggregates (ChStats): studentTTest /
+    // The A/B statistical-test aggregates (StatFns): studentTTest /
     // welchTTest / mannWhitneyUTest per event_type, cohort = parity of
     // user_id. Statistics are exact distributed arithmetic (rounded 6
     // to bridge summation order); p-values use the SAME published
     // closed-form approximations on both engines (t→z transform +
-    // A&S 7.1.26 erfc — see ChStats), so the hash compare is exact.
+    // A&S 7.1.26 erfc — see FnBuilders), so the hash compare is exact.
     "c30_ch_stats" -> Q {
       def erfcChain(n: String, t: String, df: String): String =
         s"""    abs($t) * (1.0 - 1.0/(4.0*$df)) / sqrt(1.0 + $t*$t/(2.0*$df)) AS ${n}_zz,
@@ -1268,7 +1271,7 @@ object DialectQueries {
           |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // Categorical-association family over the native contingency-map
-    // aggregate (ChStats2): χ² from the joint map via Σn²/e − N (empty
+    // aggregate (StatFns): χ² from the joint map via Σn²/e − N (empty
     // cells need no enumeration), Cramér's V (plain + Bergsma
     // bias-corrected), Pearson's contingency coefficient, Theil's U
     // uncertainty coefficient, and the scorecard information value.
@@ -1402,7 +1405,7 @@ object DialectQueries {
 
     // boundingRatio + the interval-sweep aggregates per event_type.
     // Intervals are [value, value + 10): the oracle's +1/-1 running
-    // sum over sorted boundaries is the same sweep ChStats folds;
+    // sum over sorted boundaries is the same sweep StatFns folds;
     // "first point reaching the max" = min p with cur = max because p
     // is nondecreasing in sweep order.
     "c31_ch_agg_extras" -> Q(
@@ -1438,7 +1441,7 @@ object DialectQueries {
 
     // KS test + least-squares regression per event_type. The oracle's
     // cumulative-count window evaluates |F1−F2| at the same pooled
-    // distinct-value boundaries the ChStats fold uses; the p series
+    // distinct-value boundaries the StatFns fold uses; the p series
     // and the Stephens effective-n correction are spelled identically.
     "c32_ch_stats2" -> Q(
       """WITH e AS (
@@ -1488,7 +1491,7 @@ object DialectQueries {
           |  round(tupleElement(simpleLinearRegression(event_id, value), 2), 6) AS lr_b
           |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // round-10 scalar widening (ChDialect2): URL cuts, hash exactness
+    // scalar widening (StringFns, HashFns): URL cuts, hash exactness
     // (halfMD5), string metrics, date names, bit ops, simpleJSON scan,
     // readable formatting — each vs a hand-spelled DuckDB twin. The
     // c42 slice discipline applies (1/64 key filter in both engines):
@@ -1572,7 +1575,7 @@ object DialectQueries {
           |  FROM orders WHERE modulo(o_orderkey, 64) = 0)
           |ORDER BY k LIMIT 2000""".stripMargin)),
 
-    // round-10 sweep 2 (ChDialect3): array search HOFs, WKT geometry,
+    // array search HOFs (CollectionFns), WKT geometry (NetGeoFns),
     // reinterpret, proportion z-test + sample sizing — the statistical
     // twins spell the identical Winitzki-erfinv / A&S-erfc polynomials
     "c42_ch_scalar_extras3" -> Q(
@@ -1762,7 +1765,7 @@ object DialectQueries {
           |    event_type != '', event_type = 'purchase') AS bk
           |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    // Sweep-3 deterministic surface (ChDialect4): Z-order codes (the
+    // deterministic surface (NetGeoFns, NumberFns): Z-order codes (the
     // oracle spells the 16-bit interleave as an unrolled bit sum),
     // Julian-day anchors, date constructors, MySQL-format parsing
     // (DuckDB's strptime speaks C tokens natively), value-mapping
@@ -1818,7 +1821,7 @@ object DialectQueries {
           |  toString(toDate('2024-01-01') + toIntervalMonth(o_custkey % 12)) AS im
           |FROM orders ORDER BY k LIMIT 2000""".stripMargin)),
 
-    // Aggregate-surface extras (ChStats3): one-way ANOVA (keyed-map
+    // aggregate-surface extras (StatFns): one-way ANOVA (keyed-map
     // cohort sums + Paulson F-tail normal approximation, spelled
     // identically in the oracle), singleValueOrNull, sorted
     // groupConcat, sample skewness/kurtosis from power sums,
@@ -1904,7 +1907,7 @@ object DialectQueries {
           |FROM events WHERE event_id < 300
           |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // Misc scalar sweep (ChDialect4.miscAliases): CH format() (DuckDB
+    // misc scalar sweep: CH format() (DuckDB
     // speaks the same fmt-lib '{}' syntax natively), erf/erfc via the
     // A&S polynomial (spelled identically in the oracle — DuckDB has
     // no erf), Lanczos lgamma/tgamma vs DuckDB's native ones at
@@ -2053,7 +2056,7 @@ object DialectQueries {
           |    groupArray(1.0 / (1.001 - (event_id % 1000) / CAST(1000 AS DOUBLE)))))), 4) AS max_dev
           |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // Round-11 registry tail (ChDialect5): typed dictGet spellings,
+    // registry tail: typed dictGet spellings,
     // the to*OrNull/to*OrZero dirty-string conversion family, the
     // deterministic-seed groupArraySample, translateUTF8 and
     // bitmaskToList — each exercised once, all DuckDB-oracled (the
@@ -2267,7 +2270,7 @@ object DialectQueries {
         .drop("qs_arr")
     },
 
-    // Round-13 ChDialect6 graduation: detectLanguage as the GROUP
+    // registry tail: detectLanguage as the GROUP
     // key (the t01 argmax over the one-pass signal kernel, 'un' when
     // no stopword hits), arrayShingles, the Joda datetime spellings,
     // UUIDv7 epoch extraction, the IPv4/IPv6/MAC conversion tails

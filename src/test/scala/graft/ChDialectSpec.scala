@@ -541,10 +541,10 @@ class ChDialectSpec extends SparkSpec {
     val reg = spark.sessionState.functionRegistry
     reg.registerFunction(FunctionIdentifier("mi_composed_test"),
       new ExpressionInfo("", "mi_composed_test"),
-      es => graft.functions.ChStats.maxIntersectionsComposed(es))
+      es => graft.functions.StatFns.maxIntersectionsComposed(es))
     reg.registerFunction(FunctionIdentifier("mip_composed_test"),
       new ExpressionInfo("", "mip_composed_test"),
-      es => graft.functions.ChStats.maxIntersectionsPositionComposed(es))
+      es => graft.functions.StatFns.maxIntersectionsPositionComposed(es))
     graft.sources.Tables(spark, "/root/testdata/sf0.001").events
       .createOrReplaceTempView("mi_parity_events")
     val got = spark.sql(
@@ -583,7 +583,7 @@ class ChDialectSpec extends SparkSpec {
       es => graft.functions.MwFoldExpr(arrOf(es)))
     reg.registerFunction(FunctionIdentifier("mw_fold_composed_test"),
       new ExpressionInfo("", "mw_fold_composed_test"),
-      es => graft.functions.ChStats.mwRankFoldComposed(arrOf(es)))
+      es => graft.functions.StatFns.mwRankFoldComposed(arrOf(es)))
     graft.sources.Tables(spark, "/root/testdata/sf0.001").events
       .createOrReplaceTempView("mw_parity_events")
     val got = spark.sql(
@@ -621,12 +621,27 @@ class ChDialectSpec extends SparkSpec {
     // value) counts + a prefix window (r20); the chSql translation
     // (collect_list + rank fold) stays the parity oracle — results
     // must be BIT-identical on real events at both small SFs
+    // plus a copy of sf0.001 events with NULL value and NULL user_id
+    // rows added: both plans must skip them, keeping parity
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val withNulls = java.nio.file.Files.createTempDirectory("c30_nulls").toString
+    val ev = graft.sources.Tables(spark, sfDir).events
+    val extra = ev.limit(60).withColumn("value",
+        when(col("event_id") % 3 === 0, lit(null)).otherwise(col("value")))
+      .withColumn("user_id",
+        when(col("event_id") % 3 === 1, lit(null)).otherwise(col("user_id")))
+    ev.unionByName(extra).write.parquet(s"$withNulls/events.parquet")
+    assert(spark.read.parquet(s"$withNulls/events.parquet")
+      .where(col("value").isNull || col("user_id").isNull).count() > 0)
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val a = graft.queries.DialectQueries.c30Fn(spark, dir)
       val b = graft.queries.DialectQueries.c30ChSqlFn(spark, dir)
       assert(a.columns.toSeq == b.columns.toSeq)
       assert(a.collect().toSeq == b.collect().toSeq, s"c30 parity at $dir")
     }
+    val a = graft.queries.DialectQueries.c30Fn(spark, withNulls)
+    val b = graft.queries.DialectQueries.c30ChSqlFn(spark, withNulls)
+    assert(a.collect().toSeq == b.collect().toSeq, "c30 parity with NULL rows")
   }
 
   test("kolmogorovSmirnovTest and simpleLinearRegression match hand computation") {

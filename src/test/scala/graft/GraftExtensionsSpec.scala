@@ -28,6 +28,20 @@ class GraftExtensionsSpec extends SparkSpec {
       .collect().head.getAs[Int]("p") == 4)
   }
 
+  test("median resolves to the dialect's reservoir before and after ensureRegistered") {
+    // both entry points install under one rule: the extension alone
+    // must already give the bounded reservoir `median` ensureRegistered
+    // installs, so the answer cannot depend on which ran first
+    val s = spark.newSession()
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("median")
+    def infoClass: Option[String] =
+      s.sessionState.functionRegistry.lookupFunction(id).map(_.getClassName)
+    val before = infoClass
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    assert(before == infoClass)
+    assert(before.exists(_.startsWith("graft.functions.")), s"median from $before")
+  }
+
   test("no function name is registered twice (case-insensitive)") {
     // Two registrations of one name means the active builder depends
     // on registration order (injectFunction: last wins; the
