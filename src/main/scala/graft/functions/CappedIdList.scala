@@ -1,11 +1,10 @@
 package graft.functions
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -38,7 +37,7 @@ case class CappedIdList(
     cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CappedIdBuf] {
+  extends BufferedAgg[CappedIdBuf] {
 
   require(cap >= 2, s"$prettyName cap must be >= 2, got $cap")
 
@@ -53,30 +52,22 @@ case class CappedIdList(
   override def prettyName: String =
     if (sz.isEmpty) "capped_id_list" else "capped_id_sz_list"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (id.dataType, sz.map(_.dataType)) match {
-      case (LongType, None) | (LongType, Some(IntegerType)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (other, None) => TypeCheckResult.TypeCheckFailure(
-        s"capped_id_list expects a BIGINT id, got ${other.simpleString}")
-      case (i, Some(s)) => TypeCheckResult.TypeCheckFailure(
-        s"capped_id_sz_list expects (BIGINT id, INT sz), got ($i,$s)")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = expect(sz match {
+    case None => (id.dataType == LongType) ->
+      s"capped_id_list expects a BIGINT id, got ${id.dataType.simpleString}"
+    case Some(s) => (id.dataType == LongType && s.dataType == IntegerType) ->
+      s"capped_id_sz_list expects (BIGINT id, INT sz), got (${id.dataType},${s.dataType})"
+  })
 
   override def createAggregationBuffer(): CappedIdBuf =
     new CappedIdBuf(cap, sz.isDefined)
 
-  override def update(buf: CappedIdBuf, input: InternalRow): CappedIdBuf = {
+  override protected def add(buf: CappedIdBuf, input: InternalRow): Unit = {
     val v = id.eval(input)
     if (v != null) {
       val s = sz.map(_.eval(input)).orNull
       buf.add(v.asInstanceOf[Long], if (s == null) 0 else s.asInstanceOf[Int])
     }
-    buf
-  }
-
-  override def merge(a: CappedIdBuf, b: CappedIdBuf): CappedIdBuf = {
-    a.mergeWith(b); a
   }
 
   override def eval(buf: CappedIdBuf): Any = {
@@ -91,10 +82,6 @@ case class CappedIdList(
     }
   }
 
-  override def serialize(buf: CappedIdBuf): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): CappedIdBuf =
-    CappedIdBuf.fromBytes(bytes, cap, sz.isDefined)
-
   override def withNewMutableAggBufferOffset(o: Int): CappedIdList =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CappedIdList =
@@ -107,7 +94,7 @@ case class CappedIdList(
 /** ≤ cap+1 stored ids (and sizes, when `withSz`); `size` saturates at
   * cap+1 (enough to decide the [2, cap] filter — the true cardinality
   * past that is irrelevant, so over-cap updates are free). */
-final class CappedIdBuf(cap: Int, withSz: Boolean) {
+final class CappedIdBuf(cap: Int, withSz: Boolean) extends AggBuffer[CappedIdBuf] {
   private var ids = new Array[Long](4)
   private var szs = if (withSz) new Array[Int](4) else null
   var size = 0
@@ -148,32 +135,20 @@ final class CappedIdBuf(cap: Int, withSz: Boolean) {
     (idx.map(_._1), idx.map(_._2))
   }
 
-  def toBytes: Array[Byte] = {
-    val n = math.min(size, cap + 1)
-    val bb = ByteBuffer.allocate(4 + (if (withSz) 12 else 8) * n)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(size)
+  // every counted id is stored (size ≤ cap+1), so the stored ids alone
+  // restore the size and its saturation
+  def byteSize: Int = 4 + (if (withSz) 12 else 8) * size
+
+  def write(out: ByteBuffer): Unit = {
+    out.putInt(size)
     var i = 0
-    while (i < n) {
-      bb.putLong(ids(i))
-      if (withSz) bb.putInt(szs(i))
+    while (i < size) {
+      out.putLong(ids(i))
+      if (withSz) out.putInt(szs(i))
       i += 1
     }
-    bb.array()
   }
-}
 
-object CappedIdBuf {
-  def fromBytes(bytes: Array[Byte], cap: Int, withSz: Boolean): CappedIdBuf = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val buf = new CappedIdBuf(cap, withSz)
-    val size = bb.getInt
-    val n = math.min(size, cap + 1)
-    var i = 0
-    while (i < n) {
-      buf.add(bb.getLong, if (withSz) bb.getInt else 0); i += 1
-    }
-    buf.size = size
-    buf
-  }
+  def read(in: ByteBuffer): Unit =
+    for (_ <- 0 until in.getInt()) add(in.getLong(), if (withSz) in.getInt() else 0)
 }

@@ -1375,7 +1375,9 @@ object ChDdl {
       // mutation touches thousands of partitions.
       val affectedDf = snapshot.filter(predCol)
         .select(partCols.map(col): _*).distinct().persist()
-      if (!affectedDf.isEmpty) {
+      // released on every path: a SET or predicate that fails at run
+      // time must not leave the pre-scan cached in the session
+      try if (!affectedDf.isEmpty) {
         // same localCheckpoint staging as the unpartitioned branch
         // (r20): the affected-partition rewrite no longer pays a
         // durable tmp write + read-back, and an all-rows-deleted
@@ -1411,8 +1413,7 @@ object ChDdl {
             spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
           }
         }
-      }
-      affectedDf.unpersist()
+      } finally affectedDf.unpersist()
     }
   }
 

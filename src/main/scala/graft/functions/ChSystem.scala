@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The `system.*` introspection tables the reference's OWN CLIENT
   * queries at startup (Client/Suggest.cpp:47-90 builds one UNION ALL
@@ -39,22 +40,6 @@ object ChSystem {
     "OrDefault", "State", "Merge", "MergeState", "SimpleState", "Map",
     "ForEach", "Resample")
 
-  /** Aggregate names for system.functions.is_aggregate — the dialect's
-    * registered aggregate aliases plus Spark's own common set. */
-  private val aggregateNames: Set[String] = Set(
-    "count", "sum", "avg", "min", "max", "countIf", "sumIf", "avgIf",
-    "minIf", "maxIf", "uniq", "uniqCombined", "uniqHLL12", "uniqExact",
-    "uniqUpTo", "argMax", "argMin", "groupArray", "groupUniqArray",
-    "quantile", "quantileExact", "quantileTDigest", "median",
-    "medianExact", "anyHeavy", "anyLast", "topK", "stddevPop",
-    "stddevSamp", "varPop", "varSamp", "corr", "covarPop", "covarSamp",
-    "skewPop", "kurtPop", "groupBitAnd", "groupBitOr", "groupBitXor",
-    "avgWeighted", "groupArrayMovingSum", "groupArrayMovingAvg",
-    "studentTTest", "welchTTest", "mannWhitneyUTest",
-    "kolmogorovSmirnovTest", "simpleLinearRegression", "boundingRatio",
-    "maxIntersections", "maxIntersectionsPosition", "sumKahan",
-    "largestTriangleThreeBuckets", "lttb", "bitmapBuild")
-
   /** Materialize one system table as a temp view; returns its name. */
   def ensure(spark: SparkSession, name: String): String = {
     import spark.implicits._
@@ -66,13 +51,15 @@ object ChSystem {
         // case-insensitive); the client's completion list needs the
         // dialect's canonical camelCase back — restore it from the
         // descriptors. Spark's own builtins are genuinely lowercase.
+        // is_aggregate is the registered ExpressionInfo's group — Spark
+        // marks its builtin aggregates `agg_funcs`, and graft marks its
+        // own the same way (GraftFunctions.info)
         val canonical = GraftFunctions.descriptors
           .map(_._1.funcName).map(n => n.toLowerCase -> n).toMap
-        val lowerAgg = aggregateNames.map(_.toLowerCase)
-        val registered = spark.sessionState.functionRegistry.listFunction()
-          .map(_.funcName).distinct
-        registered.map(n => (canonical.getOrElse(n, n),
-            lowerAgg.contains(n.toLowerCase)))
+        val registry = spark.sessionState.functionRegistry
+        registry.listFunction().map(_.funcName).distinct
+          .map(n => (canonical.getOrElse(n, n), registry.lookupFunction(FunctionIdentifier(n))
+            .exists(_.getGroup == GraftFunctions.aggGroup)))
           .toDF("name", "is_aggregate")
       case "table_engines" => tableEngines.toDF("name")
       case "formats" =>

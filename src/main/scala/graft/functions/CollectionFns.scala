@@ -661,9 +661,7 @@ private[graft] object CollectionFns {
     // bitmaps: the CH AggregateFunctionGroupBitmapData surface realized
     // as SORTED DISTINCT ARRAYS — a bitmap's semantic contract without
     // a wire-format dependency; every producer sort-normalizes so
-    // equal bitmaps compare equal
-    "bitmapBuild" -> { es =>
-      builtin("sort_array")(Seq(wrapAgg(builtin("collect_set")(es)))) },
+    // equal bitmaps compare equal (bitmapBuild is in `aggregates`)
     "bitmapToArray" -> { es => es.head },
     "bitmapCardinality" -> builtin("size"),
     "bitmapMin" -> builtin("array_min"),
@@ -721,4 +719,9 @@ private[graft] object CollectionFns {
     // value mapping
     "chTransformValue" -> transformValue
   ) ++ emptyArrayAliases
+
+  /** bitmapBuild(x) builds the group's bitmap from its rows' values. */
+  def aggregates: Seq[(String, Builder)] = Seq(
+    "bitmapBuild" -> { es =>
+      builtin("sort_array")(Seq(wrapAgg(builtin("collect_set")(es)))) })
 }

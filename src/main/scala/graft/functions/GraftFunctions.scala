@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import FnBuilders.{Builder, si}
 
@@ -23,15 +24,29 @@ object GraftFunctions {
 
   type Descriptor = (FunctionIdentifier, ExpressionInfo, Builder)
 
-  /** One family module's aliases, described under the module's class. */
-  private def family(owner: AnyRef, aliases: Seq[(String, Builder)]): Seq[Descriptor] =
-    aliases.map { case (name, builder) =>
-      (FunctionIdentifier(name), new ExpressionInfo(owner.getClass.getName, name), builder)
+  /** Spark's `ExpressionInfo` group for aggregates: builtins and graft
+    * names alike carry it, and `system.functions.is_aggregate` reads it. */
+  val aggGroup = "agg_funcs"
+
+  def info(owner: Class[_], name: String, aggregate: Boolean): ExpressionInfo =
+    new ExpressionInfo(owner.getName, null, name, null, "", "", "",
+      if (aggregate) aggGroup else "", "", "", "")
+
+  /** One family module's aliases, described under the module's class:
+    * its scalar names, then its aggregate names. */
+  private def family(owner: AnyRef, scalars: Seq[(String, Builder)],
+      aggregates: Seq[(String, Builder)] = Nil): Seq[Descriptor] =
+    Seq(scalars -> false, aggregates -> true).flatMap { case (aliases, agg) =>
+      aliases.map { case (name, builder) =>
+        (FunctionIdentifier(name), info(owner.getClass, name, agg), builder)
+      }
     }
 
   lazy val descriptors: Seq[Descriptor] = {
+    // a native expression is an aggregate exactly when its class is one
     def native(name: String, clazz: Class[_])(builder: Builder): Descriptor =
-      (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
+      (FunctionIdentifier(name),
+        info(clazz, name, classOf[AggregateFunction].isAssignableFrom(clazz)), builder)
 
     Seq(
       native("simhash64", classOf[SimHash64])(children => SimHash64(children.head)),
@@ -175,13 +190,13 @@ object GraftFunctions {
       family(DateTimeFns, DateTimeFns.aliases),
       family(StringFns, StringFns.aliases),
       family(HashFns, HashFns.aliases),
-      family(CollectionFns, CollectionFns.aliases),
+      family(CollectionFns, CollectionFns.aliases, CollectionFns.aggregates),
       family(NumberFns, NumberFns.aliases),
       family(NetGeoFns, NetGeoFns.aliases),
-      family(StatFns, StatFns.aliases),
+      family(StatFns, StatFns.aliases, StatFns.aggregates),
       family(SystemFns, SystemFns.aliases),
-      family(ChCombinators, ChCombinators.generated),
-      family(ChStateMerge, ChStateMerge.generated)
+      family(ChCombinators, Nil, ChCombinators.generated),
+      family(ChStateMerge, Nil, ChStateMerge.generated)
     ).flatten ++ MapAggNative.descriptors
   }
 

@@ -1,12 +1,12 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -17,11 +17,11 @@ import org.apache.spark.sql.types._
   * fixed-width buckets.
   *
   * State is a capped centroid list — (Σx, weight, lo, hi) per
-  * centroid, at most 16×nbins entries; on overflow the two centroids
-  * with the closest means merge (CH's own compaction rule). update()
-  * inserts single points map-side, merge() concatenates + compacts,
-  * eval() compacts to exactly nbins and emits the triples sorted by
-  * lower bound. Like CH, the result depends on arrival order across
+  * centroid, at most 16×nbins entries ([[Centroids]]); on overflow the
+  * two centroids with the closest means merge (CH's own compaction
+  * rule). update() inserts single points map-side, merge()
+  * concatenates + compacts, eval() compacts to exactly nbins and
+  * emits the triples sorted by lower bound. Like CH, the result depends on arrival order across
   * partitions (the docs call the error "dependent on the order of
   * data flowing into the block"), so the contract is structural —
   * HistogramSpec pins: bin count, total height = row count, coverage
@@ -32,10 +32,9 @@ case class HistogramAgg(
     nbins: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.ArrayBuffer[Array[Double]]] {
+  extends BufferedAgg[Centroids] {
 
   require(nbins >= 1, s"histogram needs >= 1 bins, got $nbins")
-  private val cap = nbins * 16
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
@@ -43,36 +42,77 @@ case class HistogramAgg(
     StructField("_1", DoubleType, nullable = false),
     StructField("_2", DoubleType, nullable = false),
     StructField("_3", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "histogram"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case _: NumericType => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"histogram expects a numeric column, got ${other.simpleString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    child.dataType.isInstanceOf[NumericType] ->
+      s"histogram expects a numeric column, got ${child.dataType.simpleString}")
+
+  override def createAggregationBuffer(): Centroids = new Centroids(nbins * 16)
+
+  override protected def add(buf: Centroids, input: InternalRow): Unit = {
+    val v = child.eval(input)
+    if (v != null) buf.insert(BufferedAgg.toDouble(v))
   }
 
-  private def toD(v: Any): Double = child.dataType match {
-    case ByteType    => v.asInstanceOf[Byte].toDouble
-    case ShortType   => v.asInstanceOf[Short].toDouble
-    case IntegerType => v.asInstanceOf[Int].toDouble
-    case LongType    => v.asInstanceOf[Long].toDouble
-    case FloatType   => v.asInstanceOf[Float].toDouble
-    case DoubleType  => v.asInstanceOf[Double]
-    case _: DecimalType => v.asInstanceOf[Decimal].toDouble
-    case other => throw new IllegalArgumentException(other.simpleString)
+  override def eval(buf: Centroids): Any = {
+    val bins = Centroids.compact(buf.cs, nbins).sortBy(c => c(0) / c(1))
+    if (bins.isEmpty) return new GenericArrayData(Array.empty[Any])
+    // CH derives bin bounds from NEIGHBORING means: lower_0 = global
+    // min, bound between bins = midpoint of adjacent means, upper_last
+    // = global max — adjacent and non-overlapping by construction
+    val means = bins.map(c => c(0) / c(1))
+    val gmin = bins.map(_(2)).min
+    val gmax = bins.map(_(3)).max
+    val bounds = gmin +: means.sliding(2).collect {
+      case mutable.ArrayBuffer(a, b) => (a + b) / 2.0
+    }.toSeq :+ gmax
+    new GenericArrayData(bins.indices.map { i =>
+      InternalRow(bounds(i), bounds(i + 1), bins(i)(1))
+    }.toArray[Any])
   }
 
-  // centroid = Array(sumX, weight, lo, hi)
-  override def createAggregationBuffer(): mutable.ArrayBuffer[Array[Double]] =
-    mutable.ArrayBuffer.empty
+  override def withNewMutableAggBufferOffset(n: Int): HistogramAgg =
+    copy(mutableAggBufferOffset = n)
+  override def withNewInputAggBufferOffset(n: Int): HistogramAgg =
+    copy(inputAggBufferOffset = n)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): HistogramAgg =
+    copy(child = newChildren(0))
+}
 
+/** At most `cap` centroids, each Array(sumX, weight, lo, hi). */
+final class Centroids(cap: Int) extends AggBuffer[Centroids] {
+  var cs = mutable.ArrayBuffer.empty[Array[Double]]
+
+  def insert(x: Double): Unit = {
+    cs += Array(x, 1.0, x, x)
+    if (cs.length > cap) cs = Centroids.compact(cs, cap / 2)
+  }
+
+  def mergeWith(o: Centroids): Unit = {
+    cs ++= o.cs
+    if (cs.length > cap) cs = Centroids.compact(cs, cap)
+  }
+
+  def byteSize: Int = 4 + 32 * cs.length
+
+  def write(out: ByteBuffer): Unit = {
+    out.putInt(cs.length)
+    cs.foreach(_.foreach(out.putDouble))
+  }
+
+  def read(in: ByteBuffer): Unit = {
+    val n = in.getInt()
+    cs = mutable.ArrayBuffer.fill(n)(Array.fill(4)(in.getDouble()))
+  }
+}
+
+object Centroids {
   /** Merge closest-mean adjacent centroids until `target` remain.
     * Sorts once; each round folds ONE closest pair — O(k²) on a
     * capped k, never on the data. */
-  private def compact(buf: mutable.ArrayBuffer[Array[Double]],
+  def compact(buf: mutable.ArrayBuffer[Array[Double]],
       target: Int): mutable.ArrayBuffer[Array[Double]] = {
     val sorted = buf.sortBy(c => c(0) / c(1))
     // always coalesce equal-mean centroids (duplicate values must
@@ -107,75 +147,4 @@ case class HistogramAgg(
     }
     sorted
   }
-
-  override def update(
-      buffer: mutable.ArrayBuffer[Array[Double]],
-      input: InternalRow): mutable.ArrayBuffer[Array[Double]] = {
-    val v = child.eval(input)
-    if (v == null) return buffer
-    val x = toD(v)
-    buffer += Array(x, 1.0, x, x)
-    if (buffer.length > cap) compact(buffer, cap / 2) else buffer
-  }
-
-  override def merge(
-      buffer: mutable.ArrayBuffer[Array[Double]],
-      other: mutable.ArrayBuffer[Array[Double]])
-      : mutable.ArrayBuffer[Array[Double]] = {
-    buffer ++= other
-    if (buffer.length > cap) compact(buffer, cap) else buffer
-  }
-
-  override def eval(buffer: mutable.ArrayBuffer[Array[Double]]): Any = {
-    val bins = compact(buffer, nbins).sortBy(c => c(0) / c(1))
-    if (bins.isEmpty) return new GenericArrayData(Array.empty[Any])
-    // CH derives bin bounds from NEIGHBORING means: lower_0 = global
-    // min, bound between bins = midpoint of adjacent means, upper_last
-    // = global max — adjacent and non-overlapping by construction
-    val means = bins.map(c => c(0) / c(1))
-    val gmin = bins.map(_(2)).min
-    val gmax = bins.map(_(3)).max
-    val bounds = gmin +: means.sliding(2).collect {
-      case mutable.ArrayBuffer(a, b) => (a + b) / 2.0
-    }.toSeq :+ gmax
-    new GenericArrayData(bins.indices.map { i =>
-      InternalRow(bounds(i), bounds(i + 1), bins(i)(1))
-    }.toArray[Any])
-  }
-
-  override def serialize(
-      buffer: mutable.ArrayBuffer[Array[Double]]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buffer.length)
-    buffer.foreach { c =>
-      out.writeDouble(c(0)); out.writeDouble(c(1))
-      out.writeDouble(c(2)); out.writeDouble(c(3))
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(
-      bytes: Array[Byte]): mutable.ArrayBuffer[Array[Double]] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val b = mutable.ArrayBuffer.empty[Array[Double]]
-    var i = 0
-    while (i < n) {
-      b += Array(in.readDouble(), in.readDouble(),
-        in.readDouble(), in.readDouble())
-      i += 1
-    }
-    b
-  }
-
-  override def withNewMutableAggBufferOffset(n: Int): HistogramAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): HistogramAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HistogramAgg =
-    copy(child = newChildren(0))
-  override def prettyName: String = "histogram"
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,9 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * ELEMENT-WISE. The idiom behind CH metric tables (counter→value
   * maps summed across rows) and per-dimension vector statistics.
   *
-  * Why a TypedImperativeAggregate and not a collect+fold spelling:
-  * the state must stay O(distinct keys | max length) per group — CH's
-  * own state shape — and must combine map-side. A
+  * Why a typed aggregate and not a collect+fold spelling: the state
+  * must stay O(distinct keys | max length) per group — CH's own state
+  * shape ([[Cells]]) — and must combine map-side. A
   * collect_list-then-fold spelling buffers O(rows × entries) per
   * group before reducing, which is an OOM shape on hot groups at
   * 100 TB; this kernel folds each row into the keyed buffer at
@@ -45,7 +45,6 @@ private[graft] object MapAggNative {
     * spellings) and `opForEach(arr)`. */
   lazy val descriptors: Seq[GraftFunctions.Descriptor] = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     import FnBuilders.builtin
     ops.toSeq.flatMap { op =>
       val mapName = s"${op}Map"
@@ -66,39 +65,11 @@ private[graft] object MapAggNative {
       }
       Seq(
         (FunctionIdentifier(mapName),
-          new ExpressionInfo(classOf[MapCombineAgg].getName, mapName), mapB),
+          GraftFunctions.info(classOf[MapCombineAgg], mapName, aggregate = true), mapB),
         (FunctionIdentifier(feName),
-          new ExpressionInfo(classOf[ForEachAgg].getName, feName), feB))
+          GraftFunctions.info(classOf[ForEachAgg], feName, aggregate = true), feB))
     }
   }
-
-  def init(op: String): (Double, Long) = op match {
-    case "min" => (Double.PositiveInfinity, 0L)
-    case "max" => (Double.NegativeInfinity, 0L)
-    case _     => (0.0, 0L)
-  }
-
-  def step(op: String, acc: (Double, Long), v: Double): (Double, Long) =
-    op match {
-      case "min" => (math.min(acc._1, v), acc._2 + 1)
-      case "max" => (math.max(acc._1, v), acc._2 + 1)
-      case _     => (acc._1 + v, acc._2 + 1)
-    }
-
-  def combine(op: String, a: (Double, Long), b: (Double, Long)): (Double, Long) =
-    op match {
-      case "min" => (math.min(a._1, b._1), a._2 + b._2)
-      case "max" => (math.max(a._1, b._1), a._2 + b._2)
-      case _     => (a._1 + b._1, a._2 + b._2)
-    }
-
-  /** The emitted value for one reduced (acc, count) cell. */
-  def result(op: String, integral: Boolean, cell: (Double, Long)): Any =
-    op match {
-      case "count" => cell._2
-      case "avg"   => cell._1 / cell._2
-      case _       => if (integral) cell._1.toLong else cell._1
-    }
 
   def resultType(op: String, integral: Boolean): DataType = op match {
     case "count" => LongType
@@ -108,20 +79,114 @@ private[graft] object MapAggNative {
 
   def isIntegral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
-    case _: DecimalType => false
     case _ => false
   }
+}
 
-  def toD(t: DataType, v: Any): Double = t match {
-    case ByteType    => v.asInstanceOf[Byte].toDouble
-    case ShortType   => v.asInstanceOf[Short].toDouble
-    case IntegerType => v.asInstanceOf[Int].toDouble
-    case LongType    => v.asInstanceOf[Long].toDouble
-    case FloatType   => v.asInstanceOf[Float].toDouble
-    case DoubleType  => v.asInstanceOf[Double]
-    case d: DecimalType => v.asInstanceOf[Decimal].toDouble
-    case other => throw new IllegalArgumentException(
-      s"non-numeric value type ${other.simpleString}")
+/** (acc, count) cells on primitive arrays, every one reduced under the
+  * same op: values reduce in Double, counts in Long. ForEach's
+  * positional array is these cells as they are; MapCombine's keyed
+  * map adds a key → cell index ([[KeyedCells]]). */
+class Cells(op: String) extends AggBuffer[Cells] {
+  private val isMin = op == "min"
+  private val isMax = op == "max"
+  private val identity =
+    if (isMin) Double.PositiveInfinity else if (isMax) Double.NegativeInfinity else 0.0
+  var acc = new Array[Double](4)
+  var cnt = new Array[Long](4)
+  var n = 0
+
+  /** Extend to `len` cells; new cells start at the op's identity. */
+  def grow(len: Int): Unit = {
+    if (len > acc.length) {
+      acc = java.util.Arrays.copyOf(acc, math.max(len, acc.length * 2))
+      cnt = java.util.Arrays.copyOf(cnt, acc.length)
+    }
+    while (n < len) { acc(n) = identity; cnt(n) = 0L; n += 1 }
+  }
+
+  /** Fold `c` values reduced to `a` into cell i (one row: c = 1). */
+  def fold(i: Int, a: Double, c: Long): Unit = {
+    acc(i) = if (isMin) math.min(acc(i), a) else if (isMax) math.max(acc(i), a) else acc(i) + a
+    cnt(i) += c
+  }
+
+  /** The emitted value of cell i. */
+  def result(i: Int, integral: Boolean): Any = op match {
+    case "count" => cnt(i)
+    case "avg"   => acc(i) / cnt(i)
+    case _       => if (integral) acc(i).toLong else acc(i)
+  }
+
+  def mergeWith(o: Cells): Unit = {
+    grow(o.n)
+    var i = 0
+    while (i < o.n) { fold(i, o.acc(i), o.cnt(i)); i += 1 }
+  }
+
+  def byteSize: Int = 4 + 16 * n
+
+  def write(out: ByteBuffer): Unit = {
+    out.putInt(n)
+    var i = 0
+    while (i < n) { out.putDouble(acc(i)); out.putLong(cnt(i)); i += 1 }
+  }
+
+  def read(in: ByteBuffer): Unit = {
+    grow(in.getInt())
+    var i = 0
+    while (i < n) { fold(i, in.getDouble(), in.getLong()); i += 1 }
+  }
+}
+
+/** Cells addressed by key: cell i holds `keys(i)`. */
+final class KeyedCells(op: String, keyType: DataType) extends Cells(op) {
+  private val slots = mutable.HashMap.empty[Any, Int]
+  val keys = mutable.ArrayBuffer.empty[Any]
+
+  def slot(k: Any): Int = slots.getOrElseUpdate(k, { keys += k; grow(n + 1); n - 1 })
+
+  override def mergeWith(o: Cells): Unit = {
+    val ko = o.asInstanceOf[KeyedCells]
+    var i = 0
+    while (i < ko.n) { fold(slot(ko.keys(i)), ko.acc(i), ko.cnt(i)); i += 1 }
+  }
+
+  override def byteSize: Int = 4 + super.byteSize + keys.iterator.map {
+    case s: UTF8String => 4 + s.numBytes
+    case _: Byte => 1
+    case _: Short => 2
+    case _: Long => 8
+    case _ => 4
+  }.sum
+
+  override def write(out: ByteBuffer): Unit = {
+    out.putInt(n)
+    keys.foreach { k =>
+      keyType match {
+        case StringType =>
+          val b = k.asInstanceOf[UTF8String].getBytes
+          out.putInt(b.length); out.put(b)
+        case ByteType  => out.put(k.asInstanceOf[Byte])
+        case ShortType => out.putShort(k.asInstanceOf[Short])
+        case LongType  => out.putLong(k.asInstanceOf[Long])
+        case _         => out.putInt(k.asInstanceOf[Int])
+      }
+    }
+    super.write(out)
+  }
+
+  override def read(in: ByteBuffer): Unit = {
+    for (_ <- 0 until in.getInt()) slot(keyType match {
+      case StringType =>
+        val b = new Array[Byte](in.getInt()); in.get(b)
+        UTF8String.fromBytes(b)
+      case ByteType  => in.get()
+      case ShortType => in.getShort()
+      case LongType  => in.getLong()
+      case _         => in.getInt()
+    })
+    super.read(in)
   }
 }
 
@@ -135,7 +200,7 @@ case class MapCombineAgg(
     op: String,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.LinkedHashMap[Any, (Double, Long)]] {
+  extends BufferedAgg[KeyedCells] {
 
   require(MapAggNative.ops(op), s"unknown map op $op")
 
@@ -150,136 +215,48 @@ case class MapCombineAgg(
   override def dataType: DataType =
     MapType(keyType, MapAggNative.resultType(op, integral),
       valueContainsNull = false)
+  override def prettyName: String = s"${op}map"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     (keys.dataType, values.dataType) match {
-      case (ArrayType(kt, _), ArrayType(vt, _)) =>
-        val kOk = kt match {
+      case (ArrayType(kt, _), ArrayType(vt, _)) => expect(
+        (kt match {
           case StringType | ByteType | ShortType | IntegerType | LongType |
                DateType => true
           case _ => false
-        }
-        val vOk = vt match {
-          case _: NumericType => true
-          case _ => false
-        }
-        if (!kOk) TypeCheckFailure(
-          s"unsupported ${op}Map key type ${kt.simpleString}")
-        else if (!vOk) TypeCheckFailure(
+        }) -> s"unsupported ${op}Map key type ${kt.simpleString}",
+        vt.isInstanceOf[NumericType] ->
           s"unsupported ${op}Map value type ${vt.simpleString}")
-        else TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"${op}Map expects (array, array), got " +
-          other.productIterator.mkString(", "))
+      case other => expect(false ->
+        s"${op}Map expects (array, array), got ${other.productIterator.mkString(", ")}")
     }
-  }
 
-  override def createAggregationBuffer()
-      : mutable.LinkedHashMap[Any, (Double, Long)] =
-    mutable.LinkedHashMap.empty
+  override def createAggregationBuffer(): KeyedCells = new KeyedCells(op, keyType)
 
-  /** InternalRow key → an immutable, buffer-safe key. */
-  private def ownKey(raw: Any): Any = raw match {
-    case s: UTF8String => s.clone()
-    case other => other
-  }
-
-  override def update(
-      buffer: mutable.LinkedHashMap[Any, (Double, Long)],
-      input: InternalRow): mutable.LinkedHashMap[Any, (Double, Long)] = {
+  override protected def add(buf: KeyedCells, input: InternalRow): Unit = {
     val ks = keys.eval(input).asInstanceOf[ArrayData]
     val vs = values.eval(input).asInstanceOf[ArrayData]
-    if (ks == null || vs == null) return buffer
+    if (ks == null || vs == null) return
     val n = math.min(ks.numElements(), vs.numElements())
     var i = 0
     while (i < n) {
       if (!ks.isNullAt(i) && !vs.isNullAt(i)) {
-        val k = ownKey(ks.get(i, keyType))
-        val v = MapAggNative.toD(valType, vs.get(i, valType))
-        val acc = buffer.getOrElse(k, MapAggNative.init(op))
-        buffer.update(k, MapAggNative.step(op, acc, v))
+        // an InternalRow key → an immutable, buffer-safe key
+        val k = ks.get(i, keyType) match {
+          case s: UTF8String => s.clone()
+          case other => other
+        }
+        buf.fold(buf.slot(k), BufferedAgg.toDouble(vs.get(i, valType)), 1L)
       }
       i += 1
     }
-    buffer
   }
 
-  override def merge(
-      buffer: mutable.LinkedHashMap[Any, (Double, Long)],
-      other: mutable.LinkedHashMap[Any, (Double, Long)])
-      : mutable.LinkedHashMap[Any, (Double, Long)] = {
-    other.foreach { case (k, cell) =>
-      buffer.get(k) match {
-        case Some(acc) => buffer.update(k, MapAggNative.combine(op, acc, cell))
-        case None      => buffer.update(k, cell)
-      }
-    }
-    buffer
-  }
-
-  override def eval(
-      buffer: mutable.LinkedHashMap[Any, (Double, Long)]): Any = {
-    val ord: Ordering[Any] = keyType match {
-      case StringType => Ordering.fromLessThan((a: Any, b: Any) =>
-        a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String]) < 0)
-      case ByteType   => Ordering.by((a: Any) => a.asInstanceOf[Byte].toInt)
-      case ShortType  => Ordering.by((a: Any) => a.asInstanceOf[Short].toInt)
-      case LongType   => Ordering.by((a: Any) => a.asInstanceOf[Long])
-      case _          => Ordering.by((a: Any) => a.asInstanceOf[Int])
-    }
-    val sorted = buffer.toSeq.sortBy(_._1)(ord)
+  override def eval(buf: KeyedCells): Any = {
+    val sorted = (0 until buf.n).sortBy(buf.keys(_))(TypeUtils.getInterpretedOrdering(keyType))
     new ArrayBasedMapData(
-      new GenericArrayData(sorted.map(_._1).toArray),
-      new GenericArrayData(sorted.map { case (_, cell) =>
-        MapAggNative.result(op, integral, cell)
-      }.toArray))
-  }
-
-  override def serialize(
-      buffer: mutable.LinkedHashMap[Any, (Double, Long)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buffer.size)
-    buffer.foreach { case (k, (d, c)) =>
-      keyType match {
-        case StringType =>
-          val b = k.asInstanceOf[UTF8String].getBytes
-          out.writeInt(b.length); out.write(b)
-        case ByteType  => out.writeByte(k.asInstanceOf[Byte].toInt)
-        case ShortType => out.writeShort(k.asInstanceOf[Short].toInt)
-        case LongType  => out.writeLong(k.asInstanceOf[Long])
-        case _         => out.writeInt(k.asInstanceOf[Int])
-      }
-      out.writeDouble(d)
-      out.writeLong(c)
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(
-      bytes: Array[Byte]): mutable.LinkedHashMap[Any, (Double, Long)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val m = mutable.LinkedHashMap.empty[Any, (Double, Long)]
-    var i = 0
-    while (i < n) {
-      val k: Any = keyType match {
-        case StringType =>
-          val len = in.readInt()
-          val b = new Array[Byte](len); in.readFully(b)
-          UTF8String.fromBytes(b)
-        case ByteType  => in.readByte()
-        case ShortType => in.readShort()
-        case LongType  => in.readLong()
-        case _         => in.readInt()
-      }
-      m.update(k, (in.readDouble(), in.readLong()))
-      i += 1
-    }
-    m
+      new GenericArrayData(sorted.map(buf.keys(_)).toArray),
+      new GenericArrayData(sorted.map(buf.result(_, integral)).toArray))
   }
 
   override def withNewMutableAggBufferOffset(n: Int): MapCombineAgg =
@@ -289,7 +266,6 @@ case class MapCombineAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MapCombineAgg =
     copy(keys = newChildren(0), values = newChildren(1))
-  override def prettyName: String = s"${op}map"
 }
 
 /** `opForEach(arr)` — element-wise (positional) reduction of array
@@ -300,7 +276,7 @@ case class ForEachAgg(
     op: String,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.ArrayBuffer[(Double, Long)]] {
+  extends BufferedAgg[Cells] {
 
   require(MapAggNative.ops(op), s"unknown forEach op $op")
 
@@ -312,83 +288,40 @@ case class ForEachAgg(
   override def nullable: Boolean = false
   override def dataType: DataType =
     ArrayType(MapAggNative.resultType(op, integral), containsNull = false)
+  override def prettyName: String = s"${op}foreach"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(_: NumericType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"${op}ForEach expects array<numeric>, got ${other.simpleString}")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    (child.dataType match {
+      case ArrayType(_: NumericType, _) => true
+      case _ => false
+    }) -> s"${op}ForEach expects array<numeric>, got ${child.dataType.simpleString}")
 
-  override def createAggregationBuffer(): mutable.ArrayBuffer[(Double, Long)] =
-    mutable.ArrayBuffer.empty
+  override def createAggregationBuffer(): Cells = new Cells(op)
 
-  override def update(
-      buffer: mutable.ArrayBuffer[(Double, Long)],
-      input: InternalRow): mutable.ArrayBuffer[(Double, Long)] = {
+  override protected def add(buf: Cells, input: InternalRow): Unit = {
     val arr = child.eval(input).asInstanceOf[ArrayData]
-    if (arr == null) return buffer
+    if (arr == null) return
     val n = arr.numElements()
-    while (buffer.length < n) buffer += MapAggNative.init(op)
+    buf.grow(n)
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val v = MapAggNative.toD(valType, arr.get(i, valType))
-        buffer(i) = MapAggNative.step(op, buffer(i), v)
-      }
+      if (!arr.isNullAt(i)) buf.fold(i, BufferedAgg.toDouble(arr.get(i, valType)), 1L)
       i += 1
     }
-    buffer
   }
 
-  override def merge(
-      buffer: mutable.ArrayBuffer[(Double, Long)],
-      other: mutable.ArrayBuffer[(Double, Long)])
-      : mutable.ArrayBuffer[(Double, Long)] = {
-    while (buffer.length < other.length) buffer += MapAggNative.init(op)
-    var i = 0
-    while (i < other.length) {
-      buffer(i) = MapAggNative.combine(op, buffer(i), other(i))
-      i += 1
-    }
-    buffer
-  }
-
-  override def eval(buffer: mutable.ArrayBuffer[(Double, Long)]): Any =
-    new GenericArrayData(buffer.map { cell =>
+  override def eval(buf: Cells): Any =
+    new GenericArrayData(Array.tabulate[Any](buf.n) { i =>
       // a position some rows lack still has count 0 under min/max —
       // emit the op identity as 0 would be wrong; CH emits 0 for
       // missing sums and the type default elsewhere. Count 0 only
       // happens for positions ALL contributing rows null'd: emit 0.
-      if (cell._2 == 0L) MapAggNative.resultType(op, integral) match {
+      if (buf.cnt(i) == 0L) MapAggNative.resultType(op, integral) match {
         case LongType => 0L
         case _        => 0.0
       }
-      else MapAggNative.result(op, integral, cell)
-    }.toArray)
-
-  override def serialize(
-      buffer: mutable.ArrayBuffer[(Double, Long)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buffer.length)
-    buffer.foreach { case (d, c) => out.writeDouble(d); out.writeLong(c) }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(
-      bytes: Array[Byte]): mutable.ArrayBuffer[(Double, Long)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val b = mutable.ArrayBuffer.empty[(Double, Long)]
-    var i = 0
-    while (i < n) { b += ((in.readDouble(), in.readLong())); i += 1 }
-    b
-  }
+      else buf.result(i, integral)
+    })
 
   override def withNewMutableAggBufferOffset(n: Int): ForEachAgg =
     copy(mutableAggBufferOffset = n)
@@ -397,5 +330,4 @@ case class ForEachAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ForEachAgg =
     copy(child = newChildren(0))
-  override def prettyName: String = s"${op}foreach"
 }

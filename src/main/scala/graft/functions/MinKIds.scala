@@ -1,10 +1,10 @@
 package graft.functions
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -26,7 +26,7 @@ case class MinKIds(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MinKBuf] {
+  extends BufferedAgg[BottomK] {
 
   require(k >= 1, s"min_k_ids k must be >= 1, got $k")
 
@@ -35,31 +35,18 @@ case class MinKIds(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "min_k_ids"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"min_k_ids expects a BIGINT id, got ${other.simpleString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    (child.dataType == LongType) ->
+      s"min_k_ids expects a BIGINT id, got ${child.dataType.simpleString}")
 
-  override def createAggregationBuffer(): MinKBuf = new MinKBuf(k)
+  override def createAggregationBuffer(): BottomK = new BottomK(k, withValues = false)
 
-  override def update(buf: MinKBuf, input: InternalRow): MinKBuf = {
+  override protected def add(buf: BottomK, input: InternalRow): Unit = {
     val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
+    if (v != null) buf.insert(v.asInstanceOf[Long], 0.0)
   }
 
-  override def merge(a: MinKBuf, b: MinKBuf): MinKBuf = { a.mergeWith(b); a }
-
-  override def eval(buf: MinKBuf): Any = new GenericArrayData(buf.sortedIds)
-
-  override def serialize(buf: MinKBuf): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): MinKBuf =
-    MinKBuf.fromBytes(bytes, k)
+  override def eval(buf: BottomK): Any = new GenericArrayData(buf.sortedKeys)
 
   override def withNewMutableAggBufferOffset(o: Int): MinKIds =
     copy(mutableAggBufferOffset = o)
@@ -70,79 +57,109 @@ case class MinKIds(
     copy(child = newChildren.head)
 }
 
-/** Bounded max-heap of the k smallest longs seen. Below capacity it
-  * appends; at capacity a new value replaces the current max only if
-  * strictly smaller. O(log k) per update, O(k) state always. */
-final class MinKBuf(k: Int) {
-  private var heap = new Array[Long](math.min(k, 8))
-  var size = 0
+/** Bottom-k of (key, value) pairs as a binary max-heap on primitive
+  * arrays: the root is the LARGEST kept pair, evicted when a strictly
+  * smaller one arrives. The kept multiset equals "the k
+  * lexicographically-smallest pairs of everything inserted" regardless
+  * of order — the determinism contract of quantileDeterministic.
+  * Without values (`min_k_ids`) it orders by key alone. O(log k) per
+  * insert, O(k) state always; `count` is every insert seen. */
+final class BottomK(cap: Int, withValues: Boolean) extends Sample {
+  private var keys = new Array[Long](math.min(cap, 4))
+  private var vals = if (withValues) new Array[Double](keys.length) else null
+  private[functions] var size = 0
+  var count = 0L
 
-  private def grow(): Unit =
-    if (size == heap.length && size < k)
-      heap = java.util.Arrays.copyOf(heap, math.min(k, heap.length * 2))
+  private def value(i: Int): Double = if (withValues) vals(i) else 0.0
+
+  private def less(h1: Long, v1: Double, h2: Long, v2: Double): Boolean =
+    h1 < h2 || (h1 == h2 && v1 < v2)
+
+  private def less(i: Int, j: Int): Boolean = less(keys(i), value(i), keys(j), value(j))
+
+  private def swap(i: Int, j: Int): Unit = {
+    val th = keys(i); keys(i) = keys(j); keys(j) = th
+    if (withValues) { val tv = vals(i); vals(i) = vals(j); vals(j) = tv }
+  }
 
   private def siftUp(i0: Int): Unit = {
     var i = i0
-    while (i > 0) {
-      val p = (i - 1) >> 1
-      if (heap(p) < heap(i)) {
-        val t = heap(p); heap(p) = heap(i); heap(i) = t; i = p
-      } else return
+    while (i > 0 && less((i - 1) / 2, i)) {
+      swap(i, (i - 1) / 2)
+      i = (i - 1) / 2
     }
   }
 
-  private def siftDown(): Unit = {
-    var i = 0
-    while (true) {
+  private def siftDown(i0: Int): Unit = {
+    var i = i0
+    var done = false
+    while (!done) {
       val l = 2 * i + 1
-      val r = l + 1
+      val r = 2 * i + 2
       var m = i
-      if (l < size && heap(l) > heap(m)) m = l
-      if (r < size && heap(r) > heap(m)) m = r
-      if (m == i) return
-      val t = heap(m); heap(m) = heap(i); heap(i) = t; i = m
+      if (l < size && less(m, l)) m = l
+      if (r < size && less(m, r)) m = r
+      if (m == i) done = true
+      else { swap(i, m); i = m }
     }
   }
 
-  def add(v: Long): Unit = {
-    if (size < k) {
-      grow()
-      heap(size) = v
+  private def put(h: Long, v: Double): Unit = {
+    if (size < cap) {
+      if (size == keys.length) {
+        val n = math.min(cap, math.max(8, keys.length * 2))
+        keys = java.util.Arrays.copyOf(keys, n)
+        if (withValues) vals = java.util.Arrays.copyOf(vals, n)
+      }
+      keys(size) = h
+      if (withValues) vals(size) = v
       size += 1
       siftUp(size - 1)
-    } else if (v < heap(0)) {
-      heap(0) = v
-      siftDown()
+    } else if (less(h, v, keys(0), value(0))) {
+      keys(0) = h
+      if (withValues) vals(0) = v
+      siftDown(0)
     }
   }
 
-  def mergeWith(o: MinKBuf): Unit = {
+  def insert(h: Long, v: Double): Unit = { count += 1; put(h, v) }
+
+  def mergeWith(s: Sample): Unit = {
+    val o = s.asInstanceOf[BottomK]
     var i = 0
-    while (i < o.size) { add(o.heap(i)); i += 1 }
+    while (i < o.size) { put(o.keys(i), o.value(i)); i += 1 }
+    count += o.count
   }
 
-  def sortedIds: Array[Long] = {
-    val s = java.util.Arrays.copyOf(heap, size)
+  def sortedKeys: Array[Long] = {
+    val s = java.util.Arrays.copyOf(keys, size)
     java.util.Arrays.sort(s)
     s
   }
 
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * size).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(size)
-    var i = 0
-    while (i < size) { bb.putLong(heap(i)); i += 1 }
-    bb.array()
+  def sortedValues: Array[Double] = {
+    val s = java.util.Arrays.copyOf(vals, size)
+    java.util.Arrays.sort(s)
+    s
   }
-}
 
-object MinKBuf {
-  def fromBytes(bytes: Array[Byte], k: Int): MinKBuf = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val buf = new MinKBuf(k)
-    val n = bb.getInt
+  def byteSize: Int = 8 + 4 + (if (withValues) 16 else 8) * size
+
+  def write(out: ByteBuffer): Unit = {
+    out.putLong(count); out.putInt(size)
     var i = 0
-    while (i < n) { buf.add(bb.getLong); i += 1 }
-    buf
+    while (i < size) {
+      out.putLong(keys(i))
+      if (withValues) out.putDouble(vals(i))
+      i += 1
+    }
+  }
+
+  def read(in: ByteBuffer): Unit = {
+    val c = in.getLong()
+    val n = in.getInt()
+    var i = 0
+    while (i < n) { put(in.getLong(), if (withValues) in.getDouble() else 0.0); i += 1 }
+    count = c
   }
 }

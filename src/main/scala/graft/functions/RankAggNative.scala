@@ -1,21 +1,20 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
-import scala.collection.mutable
+import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
 /** rankCorr(x, y) — Spearman's ρ with average-rank ties (reference
   * name registry src/Parsers/ASTFunction.h; public CH semantics).
   *
   * A rank statistic needs the group's sample: the buffer holds the
-  * (x, y) pairs — exactly the state CH's own implementation keeps —
-  * and eval() ranks each margin once (sort + linear tie-run pass,
-  * O(n log n)) before the closed-form Pearson over rank pairs. A
+  * (x, y) pairs ([[Pairs]]) — exactly the state CH's own
+  * implementation keeps — and eval() ranks each margin once (sort +
+  * linear tie-run pass, O(n log n)) before the closed-form Pearson
+  * over rank pairs. A
   * Catalyst higher-order-function spelling was rejected: `aggregate`
   * lambdas append to accumulator arrays by copy, which makes
   * per-element rank assignment O(n²) per group — this kernel is the
@@ -25,47 +24,25 @@ case class RankCorrAgg(
     y: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.ArrayBuffer[(Double, Double)]] {
+  extends BufferedAgg[Pairs] {
 
   override def children: Seq[Expression] = Seq(x, y)
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
+  override def prettyName: String = "rankcorr"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    if (children.forall(_.dataType.isInstanceOf[NumericType])) TypeCheckSuccess
-    else TypeCheckFailure("rankCorr expects two numeric columns")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    children.forall(_.dataType.isInstanceOf[NumericType]) ->
+      "rankCorr expects two numeric columns")
 
-  private def toD(e: Expression, v: Any): Double = e.dataType match {
-    case ByteType    => v.asInstanceOf[Byte].toDouble
-    case ShortType   => v.asInstanceOf[Short].toDouble
-    case IntegerType => v.asInstanceOf[Int].toDouble
-    case LongType    => v.asInstanceOf[Long].toDouble
-    case FloatType   => v.asInstanceOf[Float].toDouble
-    case DoubleType  => v.asInstanceOf[Double]
-    case _: DecimalType => v.asInstanceOf[Decimal].toDouble
-    case other => throw new IllegalArgumentException(
-      s"non-numeric rankCorr input ${other.simpleString}")
-  }
+  override def createAggregationBuffer(): Pairs = new Pairs
 
-  override def createAggregationBuffer(): mutable.ArrayBuffer[(Double, Double)] =
-    mutable.ArrayBuffer.empty
-
-  override def update(
-      buffer: mutable.ArrayBuffer[(Double, Double)],
-      input: InternalRow): mutable.ArrayBuffer[(Double, Double)] = {
+  override protected def add(buf: Pairs, input: InternalRow): Unit = {
     val xv = x.eval(input)
     val yv = y.eval(input)
-    if (xv != null && yv != null) buffer += ((toD(x, xv), toD(y, yv)))
-    buffer
+    if (xv != null && yv != null)
+      buf.add(BufferedAgg.toDouble(xv), BufferedAgg.toDouble(yv))
   }
-
-  override def merge(
-      buffer: mutable.ArrayBuffer[(Double, Double)],
-      other: mutable.ArrayBuffer[(Double, Double)])
-      : mutable.ArrayBuffer[(Double, Double)] = { buffer ++= other; buffer }
 
   /** Average ranks of `vs` (1-based positions, tie runs share the
     * mean of their positions). */
@@ -85,11 +62,11 @@ case class RankCorrAgg(
     r
   }
 
-  override def eval(buffer: mutable.ArrayBuffer[(Double, Double)]): Any = {
-    val n = buffer.length
+  override def eval(buf: Pairs): Any = {
+    val n = buf.n
     if (n < 2) return null
-    val rx = ranksOf(buffer.map(_._1).toArray)
-    val ry = ranksOf(buffer.map(_._2).toArray)
+    val rx = ranksOf(java.util.Arrays.copyOf(buf.xs, n))
+    val ry = ranksOf(java.util.Arrays.copyOf(buf.ys, n))
     var sx = 0.0; var sy = 0.0; var sxx = 0.0; var syy = 0.0; var sxy = 0.0
     var i = 0
     while (i < n) {
@@ -103,26 +80,6 @@ case class RankCorrAgg(
     if (vx <= 0.0 || vy <= 0.0) null else cov / math.sqrt(vx * vy)
   }
 
-  override def serialize(
-      buffer: mutable.ArrayBuffer[(Double, Double)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buffer.length)
-    buffer.foreach { case (a, b) => out.writeDouble(a); out.writeDouble(b) }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(
-      bytes: Array[Byte]): mutable.ArrayBuffer[(Double, Double)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val b = mutable.ArrayBuffer.empty[(Double, Double)]
-    var i = 0
-    while (i < n) { b += ((in.readDouble(), in.readDouble())); i += 1 }
-    b
-  }
-
   override def withNewMutableAggBufferOffset(n: Int): RankCorrAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): RankCorrAgg =
@@ -130,5 +87,39 @@ case class RankCorrAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): RankCorrAgg =
     copy(x = newChildren(0), y = newChildren(1))
-  override def prettyName: String = "rankcorr"
+}
+
+/** (x, y) pairs in arrival order, on two growable double arrays. */
+final class Pairs extends AggBuffer[Pairs] {
+  var xs = new Array[Double](4)
+  var ys = new Array[Double](4)
+  var n = 0
+
+  def add(x: Double, y: Double): Unit = {
+    if (n == xs.length) {
+      xs = java.util.Arrays.copyOf(xs, n * 2)
+      ys = java.util.Arrays.copyOf(ys, n * 2)
+    }
+    xs(n) = x; ys(n) = y
+    n += 1
+  }
+
+  def mergeWith(o: Pairs): Unit = {
+    var i = 0
+    while (i < o.n) { add(o.xs(i), o.ys(i)); i += 1 }
+  }
+
+  def byteSize: Int = 4 + 16 * n
+
+  def write(out: ByteBuffer): Unit = {
+    out.putInt(n)
+    var i = 0
+    while (i < n) { out.putDouble(xs(i)); out.putDouble(ys(i)); i += 1 }
+  }
+
+  def read(in: ByteBuffer): Unit = {
+    val m = in.getInt()
+    var i = 0
+    while (i < m) { add(in.getDouble(), in.getDouble()); i += 1 }
+  }
 }

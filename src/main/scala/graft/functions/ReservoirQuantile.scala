@@ -1,10 +1,10 @@
 package graft.functions
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -19,15 +19,27 @@ import org.apache.spark.sql.types._
   *    ReservoirSampler::quantileInterpolated convention (median of
   *    {1,2,3,4} is 2.5). This equals DuckDB's quantile_cont up to
   *    final-combination rounding ulps, so oracles guard with
-  *    round(…, 6). This is the regime of both verification SFs.
+  *    round(…, 6). Only sf0.01 stays in this regime: there each c08
+  *    `o_orderstatus` group holds about 5k rows. At sf0.1 each holds
+  *    about 50k, far over the cap, so c08 is sampled there and its
+  *    exact oracle does not hold (ROADMAP, known defects).
   *  - n > cap: Algorithm-R reservoir over a per-buffer xorshift PRNG
   *    (seeded deterministically, but sampling depends on arrival
   *    order — the reference's bare quantile is nondeterministic above
-  *    the reservoir too; its deterministic spelling is the
-  *    quantileDeterministic family, whose determinator we do NOT use:
-  *    above the cap it stays arrival-order dependent here, a
-  *    documented divergence). The answer is the interpolated
-  *    statistic of the sample.
+  *    the reservoir too). The answer is the interpolated statistic of
+  *    the sample.
+  *
+  * With a determinator (`det`), this is quantileDeterministic(x,
+  * determinator): the reference's determinator-keyed reservoir
+  * contract — the SAMPLE is a pure function of the (value,
+  * determinator) multiset, independent of arrival order, partitioning,
+  * and merge schedule (ReservoirSamplerDeterministic.h's purpose).
+  * Realized as a bottom-k sketch ([[BottomK]]): keep the `cap` rows
+  * with the smallest (splitmix64(determinator), value) pairs — a
+  * uniform sample when the determinator is well-distributed, EXACT
+  * below the cap (all rows kept; the same interpolated statistic), and
+  * trivially mergeable (union, re-take bottom-k), which is what makes
+  * it layout-independent where Algorithm R is not.
   *
   * Why not approx_percentile: the GK sketch at an accuracy high
   * enough to stay exact at verification scale (50000) degrades to
@@ -36,45 +48,47 @@ import org.apache.spark.sql.types._
   * is what the reference actually runs, and it is append-speed. */
 case class ReservoirQuantile(
     child: Expression,
+    det: Option[Expression],
     levels: Seq[Double],
     returnArray: Boolean,
     cap: Int = 8192,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ReservoirBuf] {
+  extends BufferedAgg[Sample] {
 
   require(levels.nonEmpty && levels.forall(l => l >= 0.0 && l <= 1.0),
     s"quantile level(s) must be in [0, 1], got ${levels.mkString(", ")}")
 
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = child +: det.toSeq
   override def nullable: Boolean = true
   override def dataType: DataType =
     if (returnArray) ArrayType(DoubleType, containsNull = false) else DoubleType
-  override def prettyName: String = "reservoir_quantile"
+  override def prettyName: String =
+    if (det.isEmpty) "reservoir_quantile" else "deterministic_reservoir_quantile"
 
-  override def createAggregationBuffer(): ReservoirBuf = new ReservoirBuf(cap)
+  // the dialect path always Casts the value to Double and the
+  // determinator to Long, but direct API construction can pass anything
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    child.dataType.isInstanceOf[NumericType] ->
+      s"$prettyName: value must be numeric, got ${child.dataType.simpleString}",
+    det.forall(_.dataType == LongType) ->
+      s"$prettyName: determinator must be BIGINT (cast it), got ${det.map(_.dataType.simpleString).orNull}")
 
-  override def update(buf: ReservoirBuf, input: InternalRow): ReservoirBuf = {
+  override def createAggregationBuffer(): Sample =
+    if (det.isEmpty) new ReservoirBuf(cap) else new BottomK(cap, withValues = true)
+
+  override protected def add(buf: Sample, input: InternalRow): Unit = {
     val v = child.eval(input)
-    if (v != null) buf.insert(v match {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case l: Long => l.toDouble
-      case i: Int => i.toDouble
-      case s: Short => s.toDouble
-      case b: Byte => b.toDouble
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(
-        s"quantile: numeric input expected, got ${other.getClass.getSimpleName}")
-    })
-    buf
+    if (v != null) det match {
+      case None => buf.asInstanceOf[ReservoirBuf].insert(BufferedAgg.toDouble(v))
+      case Some(d) =>
+        val key = d.eval(input)
+        if (key != null) buf.asInstanceOf[BottomK]
+          .insert(ReservoirQuantile.mix(key.asInstanceOf[Long]), BufferedAgg.toDouble(v))
+    }
   }
 
-  override def merge(a: ReservoirBuf, b: ReservoirBuf): ReservoirBuf = {
-    a.mergeWith(b); a
-  }
-
-  override def eval(buf: ReservoirBuf): Any = {
+  override def eval(buf: Sample): Any = {
     if (buf.count == 0L) return null
     val sorted = buf.sortedValues
     def at(q: Double): Double = {
@@ -91,23 +105,36 @@ case class ReservoirQuantile(
     else at(levels.head)
   }
 
-  override def serialize(buf: ReservoirBuf): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): ReservoirBuf =
-    ReservoirBuf.fromBytes(bytes, cap)
-
   override def withNewMutableAggBufferOffset(o: Int): ReservoirQuantile =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): ReservoirQuantile =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ReservoirQuantile =
-    copy(child = newChildren.head)
+    copy(child = newChildren.head, det = det.map(_ => newChildren(1)))
+}
+
+object ReservoirQuantile {
+  /** splitmix64 — well-mixed 64-bit hash of the determinator. */
+  def mix(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
+}
+
+/** A quantile sample: how many values arrived and the kept ones. One
+  * aggregate only ever merges samples of its own kind. */
+trait Sample extends AggBuffer[Sample] {
+  def count: Long
+  def sortedValues: Array[Double]
 }
 
 /** Reservoir state: kept values (≤ cap) + total seen count. The PRNG
   * is xorshift64*, seeded from a fixed constant so a given arrival
   * order reproduces. */
-final class ReservoirBuf(cap: Int) {
+final class ReservoirBuf(cap: Int) extends Sample {
   // start tiny: under a count(distinct) Expand plan the partial stage
   // keys on (group, distinct-col) — one buffer per PAIR, most holding
   // a single value
@@ -143,7 +170,8 @@ final class ReservoirBuf(cap: Int) {
     }
   }
 
-  def mergeWith(o: ReservoirBuf): Unit = {
+  def mergeWith(s: Sample): Unit = {
+    val o = s.asInstanceOf[ReservoirBuf]
     if (o.count == 0L) return
     if (count == 0L) {
       values = java.util.Arrays.copyOf(o.values, o.values.length)
@@ -214,242 +242,18 @@ final class ReservoirBuf(cap: Int) {
     s
   }
 
-  private[functions] def restore(c: Long, r: Long, vs: Array[Double]): Unit = {
-    count = c; rng = r; values = vs; kept = vs.length
-  }
+  def byteSize: Int = 8 + 8 + 4 + 8 * kept
 
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 8 + 4 + 8 * kept)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putLong(count); bb.putLong(rng); bb.putInt(kept)
+  def write(out: ByteBuffer): Unit = {
+    out.putLong(count); out.putLong(rng); out.putInt(kept)
     var i = 0
-    while (i < kept) { bb.putDouble(values(i)); i += 1 }
-    bb.array()
+    while (i < kept) { out.putDouble(values(i)); i += 1 }
   }
-}
 
-object ReservoirBuf {
-  def fromBytes(bytes: Array[Byte], cap: Int): ReservoirBuf = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val buf = new ReservoirBuf(cap)
-    val count = bb.getLong
-    val rng = bb.getLong
-    val kept = bb.getInt
-    val vs = new Array[Double](kept)
+  def read(in: ByteBuffer): Unit = {
+    count = in.getLong(); rng = in.getLong(); kept = in.getInt()
+    values = new Array[Double](kept)
     var i = 0
-    while (i < kept) { vs(i) = bb.getDouble; i += 1 }
-    buf.restore(count, rng, vs)
-    buf
-  }
-}
-
-/** quantileDeterministic(x, determinator): the reference's
-  * determinator-keyed reservoir contract — the SAMPLE is a pure
-  * function of the (value, determinator) multiset, independent of
-  * arrival order, partitioning, and merge schedule
-  * (ReservoirSamplerDeterministic.h's purpose). Realized as a
-  * bottom-k sketch: keep the `cap` rows with the smallest
-  * (splitmix64(determinator), value) pairs — a uniform sample when
-  * the determinator is well-distributed, EXACT below the cap (all
-  * rows kept; same interpolated statistic as ReservoirQuantile), and
-  * trivially mergeable (union, re-take bottom-k), which is what makes
-  * it layout-independent where Algorithm R is not. Per-group state is
-  * a size-cap binary max-heap of (hash, value). */
-case class DeterministicReservoirQuantile(
-    child: Expression,
-    det: Expression,
-    levels: Seq[Double],
-    returnArray: Boolean,
-    cap: Int = 8192,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[DetReservoirBuf] {
-
-  require(levels.nonEmpty && levels.forall(l => l >= 0.0 && l <= 1.0),
-    s"quantile level(s) must be in [0, 1], got ${levels.mkString(", ")}")
-
-  override def children: Seq[Expression] = Seq(child, det)
-  override def nullable: Boolean = true
-  override def dataType: DataType =
-    if (returnArray) ArrayType(DoubleType, containsNull = false) else DoubleType
-  override def prettyName: String = "deterministic_reservoir_quantile"
-
-  // analysis-time type errors, not execution-time ClassCastExceptions:
-  // the dialect path always Casts the determinator to Long, but direct
-  // API construction can pass anything (r15 advice; CappedIdList's
-  // checkInputDataTypes is the template)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (!child.dataType.isInstanceOf[NumericType])
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: value must be numeric, got ${child.dataType.simpleString}")
-    else if (det.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: determinator must be BIGINT (cast it), got " +
-          det.dataType.simpleString)
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def createAggregationBuffer(): DetReservoirBuf =
-    new DetReservoirBuf(cap)
-
-  override def update(buf: DetReservoirBuf, input: InternalRow): DetReservoirBuf = {
-    val v = child.eval(input)
-    val d = det.eval(input)
-    if (v != null && d != null) {
-      val dv = v match {
-        case x: Double => x
-        case x: Float => x.toDouble
-        case x: Long => x.toDouble
-        case x: Int => x.toDouble
-        case x: Short => x.toDouble
-        case x: Byte => x.toDouble
-        case x: org.apache.spark.sql.types.Decimal => x.toDouble
-        case other => throw new IllegalArgumentException(
-          s"quantileDeterministic: numeric input expected, got ${other.getClass.getSimpleName}")
-      }
-      buf.insert(DetReservoirBuf.mix(d.asInstanceOf[Long]), dv)
-    }
-    buf
-  }
-
-  override def merge(a: DetReservoirBuf, b: DetReservoirBuf): DetReservoirBuf = {
-    a.mergeWith(b); a
-  }
-
-  override def eval(buf: DetReservoirBuf): Any = {
-    if (buf.count == 0L) return null
-    val sorted = buf.sortedValues
-    def at(q: Double): Double = {
-      val n = sorted.length
-      val index = math.max(0.0, math.min((n - 1).toDouble, q * (n - 1)))
-      val left = index.toInt
-      val right = left + 1
-      if (right >= n) sorted(n - 1)
-      else sorted(left) * (right - index) + sorted(right) * (index - left)
-    }
-    if (returnArray) new GenericArrayData(levels.map(at).toArray)
-    else at(levels.head)
-  }
-
-  override def serialize(buf: DetReservoirBuf): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): DetReservoirBuf =
-    DetReservoirBuf.fromBytes(bytes, cap)
-
-  override def withNewMutableAggBufferOffset(o: Int): DeterministicReservoirQuantile =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): DeterministicReservoirQuantile =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DeterministicReservoirQuantile =
-    copy(child = newChildren(0), det = newChildren(1))
-}
-
-/** Bottom-k of (hash, value) pairs as a binary max-heap: the root is
-  * the LARGEST kept pair, evicted when a smaller one arrives. The
-  * kept multiset equals "the k lexicographically-smallest pairs of
-  * everything inserted" regardless of order — the determinism
-  * contract. */
-final class DetReservoirBuf(cap: Int) {
-  private var hs = new Array[Long](math.min(cap, 4))
-  private var vs = new Array[Double](math.min(cap, 4))
-  private[functions] var size = 0
-  var count = 0L
-
-  private def less(h1: Long, v1: Double, h2: Long, v2: Double): Boolean =
-    h1 < h2 || (h1 == h2 && v1 < v2)
-
-  private def swap(i: Int, j: Int): Unit = {
-    val th = hs(i); hs(i) = hs(j); hs(j) = th
-    val tv = vs(i); vs(i) = vs(j); vs(j) = tv
-  }
-
-  private def siftUp(i0: Int): Unit = {
-    var i = i0
-    while (i > 0 && less(hs((i - 1) / 2), vs((i - 1) / 2), hs(i), vs(i))) {
-      swap(i, (i - 1) / 2)
-      i = (i - 1) / 2
-    }
-  }
-
-  private def siftDown(i0: Int): Unit = {
-    var i = i0
-    var done = false
-    while (!done) {
-      val l = 2 * i + 1
-      val r = 2 * i + 2
-      var m = i
-      if (l < size && less(hs(m), vs(m), hs(l), vs(l))) m = l
-      if (r < size && less(hs(m), vs(m), hs(r), vs(r))) m = r
-      if (m == i) done = true
-      else { swap(i, m); i = m }
-    }
-  }
-
-  private def put(h: Long, v: Double): Unit = {
-    if (size < cap) {
-      if (size == hs.length) {
-        val n = math.min(cap, math.max(8, hs.length * 2))
-        hs = java.util.Arrays.copyOf(hs, n)
-        vs = java.util.Arrays.copyOf(vs, n)
-      }
-      hs(size) = h; vs(size) = v
-      size += 1
-      siftUp(size - 1)
-    } else if (less(h, v, hs(0), vs(0))) {
-      hs(0) = h; vs(0) = v
-      siftDown(0)
-    }
-  }
-
-  def insert(h: Long, v: Double): Unit = { count += 1; put(h, v) }
-
-  def mergeWith(o: DetReservoirBuf): Unit = {
-    var i = 0
-    while (i < o.size) { put(o.hs(i), o.vs(i)); i += 1 }
-    count += o.count
-  }
-
-  def sortedValues: Array[Double] = {
-    val s = java.util.Arrays.copyOf(vs, size)
-    java.util.Arrays.sort(s)
-    s
-  }
-
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 4 + 16 * size)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putLong(count)
-    bb.putInt(size)
-    var i = 0
-    while (i < size) { bb.putLong(hs(i)); bb.putDouble(vs(i)); i += 1 }
-    bb.array()
-  }
-}
-
-object DetReservoirBuf {
-  /** splitmix64 — well-mixed 64-bit hash of the determinator. */
-  def mix(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
-  def fromBytes(bytes: Array[Byte], cap: Int): DetReservoirBuf = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val buf = new DetReservoirBuf(cap)
-    val count = bb.getLong
-    val size = bb.getInt
-    var i = 0
-    while (i < size) {
-      val h = bb.getLong
-      val v = bb.getDouble
-      buf.insert(h, v)
-      i += 1
-    }
-    buf.count = count
-    buf
+    while (i < kept) { values(i) = in.getDouble(); i += 1 }
   }
 }

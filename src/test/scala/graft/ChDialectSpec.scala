@@ -943,6 +943,24 @@ class ChDialectSpec extends SparkSpec {
     val vx = rx.map(a => a * a).sum - rx.sum * rx.sum / n
     val vy = ry.map(a => a * a).sum - ry.sum * ry.sum / n
     assert(math.abs(tied.getDouble(0) - cov / math.sqrt(vx * vy)) < 1e-12)
+    // 8 partitions: the pair buffers serialize, shuffle and merge; the
+    // tied ranks are half-integers, so every sum is exact and the
+    // result equals a driver-side Spearman with average-rank ties
+    val pts = (0 until 2000).map(i => ((i % 97).toDouble, ((i * 37) % 101).toDouble))
+    pts.toDF("x", "y").repartition(8).createOrReplaceTempView("rank_corr_8")
+    val spread = spark.sql(graft.functions.ChSql.translate(
+      "SELECT rankCorr(x, y) AS r FROM rank_corr_8")).collect().head
+    def avgRanks(vs: Seq[Double]): Seq[Double] = {
+      val pos = vs.sorted.zipWithIndex.groupBy(_._1)
+        .map { case (v, ps) => v -> ps.map(_._2 + 1.0).sum / ps.size }
+      vs.map(pos)
+    }
+    val (ax, ay) = (avgRanks(pts.map(_._1)), avgRanks(pts.map(_._2)))
+    val np = pts.size.toDouble
+    val c8 = ax.zip(ay).map { case (a, b) => a * b }.sum - ax.sum * ay.sum / np
+    val vx8 = ax.map(a => a * a).sum - ax.sum * ax.sum / np
+    val vy8 = ay.map(a => a * a).sum - ay.sum * ay.sum / np
+    assert(math.abs(spread.getDouble(0) - c8 / math.sqrt(vx8 * vy8)) < 1e-12)
     // textbook AUC fixture
     val auc = spark.sql(graft.functions.ChSql.translate(
       "SELECT arrayAUC(array(0.1, 0.4, 0.35, 0.8), array(0, 0, 1, 1)) AS a"))

@@ -1,6 +1,11 @@
 package graft
 
-import graft.functions.{ChDdl, GraftFunctions}
+import scala.util.Try
+
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.types.{ArrayType, LongType}
+import graft.functions.{ChDdl, ChSystem, GraftFunctions}
 
 /** system.* introspection tables — proven by running the reference
   * client's OWN autocompletion query (Client/Suggest.cpp:47-90). */
@@ -55,5 +60,49 @@ class ChSystemSpec extends SparkSpec {
       ChDdl.execute(spark, "SYSTEM FLUSH LOGS")
     }
     assert(e.getMessage != null)
+  }
+
+  test("system.functions.is_aggregate reads the registry, builtins and graft names alike") {
+    val s = spark.newSession()
+    GraftFunctions.ensureRegistered(s)
+    val isAgg = s.table(ChSystem.ensure(s, "functions")).collect()
+      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    for (n <- Seq("cramersV", "quantileGK", "groupArraySample", "sumMap",
+        "sumArrayIf", "sumState", "percentile", "collect_list"))
+      assert(isAgg(n), s"$n should read as an aggregate")
+    // a scalar from each family, and a window function
+    for (n <- Seq("toDate", "lower", "cityHash64", "arrayCumSum", "plus",
+        "IPv4NumToString", "arrayAUC", "currentDatabase", "lagInFrame", "upper"))
+      assert(!isAgg(n), s"$n should read as a scalar")
+  }
+
+  test("each graft name's declared aggregate flag matches what its builder builds") {
+    // placeholder arguments of a few shapes at arities 1–4; the first
+    // shape a builder accepts decides. Builders that accept none (they
+    // need lambdas, dictionaries or exact literals, or they refuse)
+    // are left out of the reported count.
+    val x = AttributeReference("x", LongType)()
+    val arr = AttributeReference("a", ArrayType(LongType))()
+    val shapes: Seq[Int => Seq[Expression]] = Seq(
+      n => Seq.fill(n)(Literal(2)),
+      n => Seq.fill(n)(x),
+      n => Seq.fill(n)(Literal(0.5)),
+      n => Seq.fill(n)(Literal("a")),
+      n => Seq.fill(n)(arr),
+      n => Literal(2) +: Seq.fill(n - 1)(x),
+      n => Seq.fill(n - 1)(x) :+ Literal(2),
+      n => Literal("(?1)(?2)") +: Seq.fill(n - 1)(x),
+      n => Literal("sum") +: Seq.fill(n - 1)(arr))
+    val built = GraftFunctions.descriptors.flatMap { case (id, ei, builder) =>
+      (1 to 4).iterator.flatMap(n => shapes.iterator.map(sh => Try(builder(sh(n)))))
+        .collectFirst { case scala.util.Success(e) => (id.funcName, ei, e) }
+    }
+    val wrong = built.collect { case (name, ei, e)
+        if (ei.getGroup == GraftFunctions.aggGroup) !=
+          e.find(_.isInstanceOf[AggregateFunction]).isDefined => name }
+    val checked = built.size
+    info(s"checked $checked of ${GraftFunctions.descriptors.size} graft builders")
+    assert(wrong.isEmpty, s"declared flag disagrees with the built tree: ${wrong.mkString(", ")}")
+    assert(checked > 900, s"only $checked builders built from placeholders")
   }
 }

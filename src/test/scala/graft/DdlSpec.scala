@@ -209,6 +209,27 @@ class DdlSpec extends SparkSpec {
       .select("v").as[Double].head() == 1004.0)
   }
 
+  test("a partitioned mutation that fails at run time leaves nothing cached") {
+    GraftFunctions.ensureRegistered(spark)
+    val ct = ChDdl.parse(
+      """CREATE TABLE graft_mut_fail (k Int64, grp String, v Float64)
+        |ENGINE = MergeTree() PARTITION BY grp ORDER BY (k)""".stripMargin)
+    ct.create(spark)
+    ct.insertSelect(spark, spark.range(1, 21).select($"id".as("k"),
+      concat(lit("g"), ($"id" % 2).cast("string")).as("grp"), ($"id" * 1.0).as("v")))
+    spark.catalog.clearCache()
+    // the affected-partition pre-scan succeeds and is cached; the SET
+    // expression then fails while the rewrite is staged
+    val e = intercept[Exception] {
+      ChDdl.alter(spark,
+        "ALTER TABLE graft_mut_fail UPDATE v = raise_error('mutation boom') WHERE grp = 'g1'")
+    }
+    assert(e.getMessage.contains("mutation boom"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed mutation left its affected-partition pre-scan cached")
+    assert(spark.table("graft_mut_fail").count() == 20)
+  }
+
   test("ALTER UPDATE evaluates every SET and the predicate against the original row") {
     GraftFunctions.ensureRegistered(spark)
     val ct = ChDdl.parse(
