@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.Decimal
   * allocation per state, which matters under a count(distinct) Expand
   * plan's hundreds of thousands of small states. The bytes never leave
   * a query, so the layout is free to change. Contravariant: a buffer
-  * that merges any [[Sample]] also serves an aggregate typed on one
-  * kind of sample. */
+  * that merges any [[Cells]] also serves an aggregate typed on the
+  * subclass [[KeyedCells]]. */
 trait AggBuffer[-B] {
   def mergeWith(o: B): Unit
   /** The number of bytes [[write]] writes. */
@@ -62,14 +62,18 @@ trait BufferedAgg[B <: AggBuffer[B]] extends TypedImperativeAggregate[B] {
 }
 
 object BufferedAgg {
+  /** The first `n` values of `a`, sorted, in a fresh array. */
+  def sortedPrefix(a: Array[Long], n: Int): Array[Long] = {
+    val s = java.util.Arrays.copyOf(a, n); java.util.Arrays.sort(s); s
+  }
+  def sortedPrefix(a: Array[Double], n: Int): Array[Double] = {
+    val s = java.util.Arrays.copyOf(a, n); java.util.Arrays.sort(s); s
+  }
+
   /** A numeric input's physical value as a double. */
   def toDouble(v: Any): Double = v match {
     case d: Double => d
-    case f: Float => f.toDouble
-    case l: Long => l.toDouble
-    case i: Int => i.toDouble
-    case s: Short => s.toDouble
-    case b: Byte => b.toDouble
+    case n: java.lang.Number => n.doubleValue // Float, Long, Int, Short, Byte
     case d: Decimal => d.toDouble
     case other => throw new IllegalArgumentException(
       s"numeric input expected, got ${other.getClass.getSimpleName}")

@@ -73,13 +73,7 @@ case class CappedIdList(
   override def eval(buf: CappedIdBuf): Any = {
     if (buf.size < 2 || buf.size > cap) null
     else if (sz.isEmpty) new GenericArrayData(buf.sortedIds)
-    else {
-      val (ids, szs) = buf.sortedByIds
-      val out = new Array[Any](ids.length)
-      var i = 0
-      while (i < ids.length) { out(i) = InternalRow(ids(i), szs(i)); i += 1 }
-      new GenericArrayData(out)
-    }
+    else new GenericArrayData(buf.sortedPairs.map[Any] { case (i, s) => InternalRow(i, s) })
   }
 
   override def withNewMutableAggBufferOffset(o: Int): CappedIdList =
@@ -116,24 +110,14 @@ final class CappedIdBuf(cap: Int, withSz: Boolean) extends AggBuffer[CappedIdBuf
     while (i < o.size && size <= cap) {
       add(o.ids(i), if (withSz) o.szs(i) else 0); i += 1
     }
-    // if the other side already overflowed but we copied all its
-    // stored ids without overflowing, its saturation must carry over
-    if (o.size > cap && size <= cap) size = cap + 1
   }
 
-  def sortedIds: Array[Long] = {
-    val s = java.util.Arrays.copyOf(ids, size)
-    java.util.Arrays.sort(s)
-    s
-  }
+  def sortedIds: Array[Long] = BufferedAgg.sortedPrefix(ids, size)
 
-  /** (ids, sizes) by id ascending; a stable sort, so equal ids keep
-    * their arrival order. */
-  def sortedByIds: (Array[Long], Array[Int]) = {
-    val idx = (0 until size).toArray
-      .map(i => (ids(i), szs(i))).sortBy(_._1)
-    (idx.map(_._1), idx.map(_._2))
-  }
+  /** (id, size) pairs by id ascending; a stable sort, so equal ids
+    * keep their arrival order. */
+  def sortedPairs: Array[(Long, Int)] =
+    Array.tabulate(size)(i => (ids(i), szs(i))).sortBy(_._1)
 
   // every counted id is stored (size ≤ cap+1), so the stored ids alone
   // restore the size and its saturation

@@ -115,17 +115,19 @@ object Centroids {
   def compact(buf: mutable.ArrayBuffer[Array[Double]],
       target: Int): mutable.ArrayBuffer[Array[Double]] = {
     val sorted = buf.sortBy(c => c(0) / c(1))
+    def fold(i: Int): Unit = { // sorted(i) absorbs sorted(i + 1)
+      val a = sorted(i); val b = sorted(i + 1)
+      sorted(i) = Array(a(0) + b(0), a(1) + b(1),
+        math.min(a(2), b(2)), math.max(a(3), b(3)))
+      sorted.remove(i + 1)
+    }
     // always coalesce equal-mean centroids (duplicate values must
     // land in ONE bin even under the bin budget)
     var i = sorted.length - 2
     while (i >= 0) {
       if (i + 1 < sorted.length &&
-          sorted(i)(0) / sorted(i)(1) == sorted(i + 1)(0) / sorted(i + 1)(1)) {
-        val a = sorted(i); val b = sorted(i + 1)
-        sorted(i) = Array(a(0) + b(0), a(1) + b(1),
-          math.min(a(2), b(2)), math.max(a(3), b(3)))
-        sorted.remove(i + 1)
-      }
+          sorted(i)(0) / sorted(i)(1) == sorted(i + 1)(0) / sorted(i + 1)(1))
+        fold(i)
       i -= 1
     }
     var n = sorted.length
@@ -139,10 +141,7 @@ object Centroids {
         if (gap < bestGap) { bestGap = gap; best = i }
         i += 1
       }
-      val a = sorted(best); val b = sorted(best + 1)
-      sorted(best) = Array(a(0) + b(0), a(1) + b(1),
-        math.min(a(2), b(2)), math.max(a(3), b(3)))
-      sorted.remove(best + 1)
+      fold(best)
       n -= 1
     }
     sorted

@@ -152,25 +152,18 @@ final class KeyedCells(op: String, keyType: DataType) extends Cells(op) {
     while (i < ko.n) { fold(slot(ko.keys(i)), ko.acc(i), ko.cnt(i)); i += 1 }
   }
 
+  // a string key travels as its bytes, any integral key as a long
   override def byteSize: Int = 4 + super.byteSize + keys.iterator.map {
     case s: UTF8String => 4 + s.numBytes
-    case _: Byte => 1
-    case _: Short => 2
-    case _: Long => 8
-    case _ => 4
+    case _ => 8
   }.sum
 
   override def write(out: ByteBuffer): Unit = {
     out.putInt(n)
     keys.foreach { k =>
-      keyType match {
-        case StringType =>
-          val b = k.asInstanceOf[UTF8String].getBytes
-          out.putInt(b.length); out.put(b)
-        case ByteType  => out.put(k.asInstanceOf[Byte])
-        case ShortType => out.putShort(k.asInstanceOf[Short])
-        case LongType  => out.putLong(k.asInstanceOf[Long])
-        case _         => out.putInt(k.asInstanceOf[Int])
+      k match {
+        case s: UTF8String => val b = s.getBytes; out.putInt(b.length); out.put(b)
+        case n => out.putLong(n.asInstanceOf[java.lang.Number].longValue)
       }
     }
     super.write(out)
@@ -181,10 +174,10 @@ final class KeyedCells(op: String, keyType: DataType) extends Cells(op) {
       case StringType =>
         val b = new Array[Byte](in.getInt()); in.get(b)
         UTF8String.fromBytes(b)
-      case ByteType  => in.get()
-      case ShortType => in.getShort()
+      case ByteType  => in.getLong().toByte
+      case ShortType => in.getLong().toShort
       case LongType  => in.getLong()
-      case _         => in.getInt()
+      case _         => in.getLong().toInt
     })
     super.read(in)
   }

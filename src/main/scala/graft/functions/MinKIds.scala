@@ -26,7 +26,7 @@ case class MinKIds(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends BufferedAgg[BottomK] {
+  extends BufferedAgg[MinKBuf] {
 
   require(k >= 1, s"min_k_ids k must be >= 1, got $k")
 
@@ -39,14 +39,14 @@ case class MinKIds(
     (child.dataType == LongType) ->
       s"min_k_ids expects a BIGINT id, got ${child.dataType.simpleString}")
 
-  override def createAggregationBuffer(): BottomK = new BottomK(k, withValues = false)
+  override def createAggregationBuffer(): MinKBuf = new MinKBuf(k)
 
-  override protected def add(buf: BottomK, input: InternalRow): Unit = {
+  override protected def add(buf: MinKBuf, input: InternalRow): Unit = {
     val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[Long], 0.0)
+    if (v != null) buf.add(v.asInstanceOf[Long])
   }
 
-  override def eval(buf: BottomK): Any = new GenericArrayData(buf.sortedKeys)
+  override def eval(buf: MinKBuf): Any = new GenericArrayData(buf.sortedIds)
 
   override def withNewMutableAggBufferOffset(o: Int): MinKIds =
     copy(mutableAggBufferOffset = o)
@@ -57,41 +57,53 @@ case class MinKIds(
     copy(child = newChildren.head)
 }
 
-/** Bottom-k of (key, value) pairs as a binary max-heap on primitive
-  * arrays: the root is the LARGEST kept pair, evicted when a strictly
-  * smaller one arrives. The kept multiset equals "the k
-  * lexicographically-smallest pairs of everything inserted" regardless
-  * of order — the determinism contract of quantileDeterministic.
-  * Without values (`min_k_ids`) it orders by key alone. O(log k) per
-  * insert, O(k) state always; `count` is every insert seen. */
-final class BottomK(cap: Int, withValues: Boolean) extends Sample {
-  private var keys = new Array[Long](math.min(cap, 4))
-  private var vals = if (withValues) new Array[Double](keys.length) else null
+/** The bounded heap behind every bottom-k buffer: a binary max-heap
+  * on primitive arrays whose root is the LARGEST kept entry, evicted
+  * when a strictly smaller one arrives, so the kept entries are the
+  * `cap` smallest of everything inserted regardless of order. Entries
+  * are keyed by `keys`; a subclass says what else an entry holds and
+  * how two entries order ([[less]], [[swap]]), so each caller's
+  * comparisons are its own code, not a per-comparison branch. O(log
+  * cap) per insert, O(cap) state always. */
+abstract class BottomK(cap: Int) {
+  protected var keys = new Array[Long](math.min(cap + 1, 4))
   private[functions] var size = 0
-  var count = 0L
 
-  private def value(i: Int): Double = if (withValues) vals(i) else 0.0
+  /** Entry i orders strictly before entry j. */
+  protected def less(i: Int, j: Int): Boolean
+  protected def swap(i: Int, j: Int): Unit
+  /** The arrays now hold `n` entries; a subclass grows its own. */
+  protected def grown(n: Int): Unit = ()
 
-  private def less(h1: Long, v1: Double, h2: Long, v2: Double): Boolean =
-    h1 < h2 || (h1 == h2 && v1 < v2)
-
-  private def less(i: Int, j: Int): Boolean = less(keys(i), value(i), keys(j), value(j))
-
-  private def swap(i: Int, j: Int): Unit = {
-    val th = keys(i); keys(i) = keys(j); keys(j) = th
-    if (withValues) { val tv = vals(i); vals(i) = vals(j); vals(j) = tv }
-  }
-
-  private def siftUp(i0: Int): Unit = {
-    var i = i0
-    while (i > 0 && less((i - 1) / 2, i)) {
-      swap(i, (i - 1) / 2)
-      i = (i - 1) / 2
+  /** Slot `size`, one past the kept entries (the arrays grow on
+    * demand, to at most cap + 1): a new entry is written there, then
+    * [[offer]]ed. Read it before `keys`, which it may replace. */
+  protected final def freeSlot(): Int = {
+    if (size == keys.length) {
+      val n = math.min(cap + 1, math.max(8, keys.length * 2))
+      keys = java.util.Arrays.copyOf(keys, n)
+      grown(n)
     }
+    size
   }
 
-  private def siftDown(i0: Int): Unit = {
-    var i = i0
+  /** Keep the entry in slot [[freeSlot]]: under the cap it joins the heap;
+    * at the cap it replaces the root if strictly smaller. */
+  protected final def offer(): Unit =
+    if (size < cap) {
+      var i = size
+      size += 1
+      while (i > 0 && less((i - 1) / 2, i)) {
+        swap(i, (i - 1) / 2)
+        i = (i - 1) / 2
+      }
+    } else if (less(size, 0)) {
+      swap(0, size)
+      siftDown()
+    }
+
+  private def siftDown(): Unit = {
+    var i = 0
     var done = false
     while (!done) {
       val l = 2 * i + 1
@@ -103,63 +115,36 @@ final class BottomK(cap: Int, withValues: Boolean) extends Sample {
       else { swap(i, m); i = m }
     }
   }
+}
 
-  private def put(h: Long, v: Double): Unit = {
-    if (size < cap) {
-      if (size == keys.length) {
-        val n = math.min(cap, math.max(8, keys.length * 2))
-        keys = java.util.Arrays.copyOf(keys, n)
-        if (withValues) vals = java.util.Arrays.copyOf(vals, n)
-      }
-      keys(size) = h
-      if (withValues) vals(size) = v
-      size += 1
-      siftUp(size - 1)
-    } else if (less(h, v, keys(0), value(0))) {
-      keys(0) = h
-      if (withValues) vals(0) = v
-      siftDown(0)
-    }
+/** The k smallest longs seen: entries are keys alone. */
+final class MinKBuf(k: Int) extends BottomK(k) with AggBuffer[MinKBuf] {
+  protected def less(i: Int, j: Int): Boolean = keys(i) < keys(j)
+
+  protected def swap(i: Int, j: Int): Unit = {
+    val t = keys(i); keys(i) = keys(j); keys(j) = t
   }
 
-  def insert(h: Long, v: Double): Unit = { count += 1; put(h, v) }
+  def add(v: Long): Unit = { val i = freeSlot(); keys(i) = v; offer() }
 
-  def mergeWith(s: Sample): Unit = {
-    val o = s.asInstanceOf[BottomK]
+  def mergeWith(o: MinKBuf): Unit = {
     var i = 0
-    while (i < o.size) { put(o.keys(i), o.value(i)); i += 1 }
-    count += o.count
+    while (i < o.size) { add(o.keys(i)); i += 1 }
   }
 
-  def sortedKeys: Array[Long] = {
-    val s = java.util.Arrays.copyOf(keys, size)
-    java.util.Arrays.sort(s)
-    s
-  }
+  def sortedIds: Array[Long] = BufferedAgg.sortedPrefix(keys, size)
 
-  def sortedValues: Array[Double] = {
-    val s = java.util.Arrays.copyOf(vals, size)
-    java.util.Arrays.sort(s)
-    s
-  }
-
-  def byteSize: Int = 8 + 4 + (if (withValues) 16 else 8) * size
+  def byteSize: Int = 4 + 8 * size
 
   def write(out: ByteBuffer): Unit = {
-    out.putLong(count); out.putInt(size)
+    out.putInt(size)
     var i = 0
-    while (i < size) {
-      out.putLong(keys(i))
-      if (withValues) out.putDouble(vals(i))
-      i += 1
-    }
+    while (i < size) { out.putLong(keys(i)); i += 1 }
   }
 
   def read(in: ByteBuffer): Unit = {
-    val c = in.getLong()
     val n = in.getInt()
     var i = 0
-    while (i < n) { put(in.getLong(), if (withValues) in.getDouble() else 0.0); i += 1 }
-    count = c
+    while (i < n) { add(in.getLong()); i += 1 }
   }
 }

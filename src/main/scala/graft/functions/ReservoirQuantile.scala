@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
   * contract — the SAMPLE is a pure function of the (value,
   * determinator) multiset, independent of arrival order, partitioning,
   * and merge schedule (ReservoirSamplerDeterministic.h's purpose).
-  * Realized as a bottom-k sketch ([[BottomK]]): keep the `cap` rows
+  * Realized as a bottom-k sketch ([[DetSample]]): keep the `cap` rows
   * with the smallest (splitmix64(determinator), value) pairs — a
   * uniform sample when the determinator is well-distributed, EXACT
   * below the cap (all rows kept; the same interpolated statistic), and
@@ -75,16 +75,16 @@ case class ReservoirQuantile(
       s"$prettyName: determinator must be BIGINT (cast it), got ${det.map(_.dataType.simpleString).orNull}")
 
   override def createAggregationBuffer(): Sample =
-    if (det.isEmpty) new ReservoirBuf(cap) else new BottomK(cap, withValues = true)
+    if (det.isEmpty) new ReservoirBuf(cap) else new DetSample(cap)
 
   override protected def add(buf: Sample, input: InternalRow): Unit = {
     val v = child.eval(input)
-    if (v != null) det match {
-      case None => buf.asInstanceOf[ReservoirBuf].insert(BufferedAgg.toDouble(v))
-      case Some(d) =>
-        val key = d.eval(input)
-        if (key != null) buf.asInstanceOf[BottomK]
-          .insert(ReservoirQuantile.mix(key.asInstanceOf[Long]), BufferedAgg.toDouble(v))
+    if (v != null) buf match {
+      case r: ReservoirBuf => r.insert(BufferedAgg.toDouble(v))
+      case d: DetSample =>
+        val key = det.get.eval(input)
+        if (key != null)
+          d.insert(key.asInstanceOf[Long], BufferedAgg.toDouble(v))
     }
   }
 
@@ -112,16 +112,6 @@ case class ReservoirQuantile(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ReservoirQuantile =
     copy(child = newChildren.head, det = det.map(_ => newChildren(1)))
-}
-
-object ReservoirQuantile {
-  /** splitmix64 — well-mixed 64-bit hash of the determinator. */
-  def mix(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
 }
 
 /** A quantile sample: how many values arrived and the kept ones. One
@@ -236,11 +226,7 @@ final class ReservoirBuf(cap: Int) extends Sample {
     }
   }
 
-  def sortedValues: Array[Double] = {
-    val s = java.util.Arrays.copyOf(values, kept)
-    java.util.Arrays.sort(s)
-    s
-  }
+  def sortedValues: Array[Double] = BufferedAgg.sortedPrefix(values, kept)
 
   def byteSize: Int = 8 + 8 + 4 + 8 * kept
 
@@ -255,5 +241,61 @@ final class ReservoirBuf(cap: Int) extends Sample {
     values = new Array[Double](kept)
     var i = 0
     while (i < kept) { values(i) = in.getDouble(); i += 1 }
+  }
+}
+
+/** The deterministic sample: the bottom-`cap` (hash, value) pairs,
+  * ordered lexicographically, on the shared [[BottomK]] heap. The kept
+  * multiset equals "the cap smallest pairs of everything inserted"
+  * regardless of order — the determinism contract. `count` is every
+  * insert seen. */
+final class DetSample(cap: Int) extends BottomK(cap) with Sample {
+  private var vals = new Array[Double](keys.length)
+  var count = 0L
+
+  protected def less(i: Int, j: Int): Boolean =
+    keys(i) < keys(j) || (keys(i) == keys(j) && vals(i) < vals(j))
+
+  protected def swap(i: Int, j: Int): Unit = {
+    val th = keys(i); keys(i) = keys(j); keys(j) = th
+    val tv = vals(i); vals(i) = vals(j); vals(j) = tv
+  }
+
+  override protected def grown(n: Int): Unit = vals = java.util.Arrays.copyOf(vals, n)
+
+  private def put(h: Long, v: Double): Unit = { val i = freeSlot(); keys(i) = h; vals(i) = v; offer() }
+
+  /** One row, keyed by its determinator's splitmix64 hash. */
+  def insert(determinator: Long, v: Double): Unit = { count += 1; put(mix(determinator), v) }
+
+  private def mix(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
+
+  def mergeWith(s: Sample): Unit = {
+    val o = s.asInstanceOf[DetSample]
+    var i = 0
+    while (i < o.size) { put(o.keys(i), o.vals(i)); i += 1 }
+    count += o.count
+  }
+
+  def sortedValues: Array[Double] = BufferedAgg.sortedPrefix(vals, size)
+
+  def byteSize: Int = 8 + 4 + 16 * size
+
+  def write(out: ByteBuffer): Unit = {
+    out.putLong(count); out.putInt(size)
+    var i = 0
+    while (i < size) { out.putLong(keys(i)); out.putDouble(vals(i)); i += 1 }
+  }
+
+  def read(in: ByteBuffer): Unit = {
+    count = in.getLong()
+    val n = in.getInt()
+    var i = 0
+    while (i < n) { put(in.getLong(), in.getDouble()); i += 1 }
   }
 }
