@@ -330,6 +330,62 @@ class CreateFormsSpec extends SparkSpec {
     assert(w.getMessage.contains("INTO OUTFILE"), w.getMessage)
   }
 
+  test("RowBinaryWithNamesAndTypes: byte-level layout pinned against the format spec") {
+    // varuint column count, names, then type names (varint-length
+    // strings); each row: little-endian fixed widths, varint-length
+    // strings, UInt16 days, UInt32 seconds, and one 0/1 flag byte
+    // before a Nullable value with nothing after a NULL
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.Row
+    val schema = StructType(Seq(
+      StructField("s", StringType, nullable = false),
+      StructField("i64", LongType, nullable = false),
+      StructField("i32", IntegerType, nullable = false),
+      StructField("i16", ShortType, nullable = false),
+      StructField("i8", ByteType, nullable = false),
+      StructField("f64", DoubleType, nullable = false),
+      StructField("f32", FloatType, nullable = false),
+      StructField("b", BooleanType, nullable = false),
+      StructField("d", DateType, nullable = false),
+      StructField("ts", TimestampType, nullable = false),
+      StructField("ntz", TimestampNTZType, nullable = false),
+      StructField("u64", DecimalType(20, 0), nullable = false),
+      StructField("n", LongType, nullable = true)))
+    val row = Row("hé", -2L, 0x01020304, (-3).toShort, 7.toByte, 1.5d, -2.0f,
+      true, java.sql.Date.valueOf("2024-03-15"),
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-03-15T13:45:00Z")),
+      java.time.LocalDateTime.parse("2000-01-02T03:04:05"),
+      new java.math.BigDecimal("18446744073709551615"), null)
+    val df = spark.createDataFrame(java.util.Arrays.asList(row), schema)
+    val dir = java.nio.file.Files.createTempDirectory("graft_rowbin_pin")
+    val out = dir.resolve("pin.bin")
+    graft.sources.RowBinary.write(df, out.toString, "RowBinaryWithNamesAndTypes")
+    val hex = java.nio.file.Files.readAllBytes(out)
+      .map(b => f"${b & 0xff}%02x").mkString
+    val expected =
+      "0d" +                                           // 13 columns
+        "0173" + "03693634" + "03693332" + "03693136" + "026938" +
+        "03663634" + "03663332" + "0162" + "0164" + "027473" +
+        "036e747a" + "03753634" + "016e" +             // names
+        "06537472696e67" + "05496e743634" + "05496e743332" +
+        "05496e743136" + "04496e7438" + "07466c6f61743634" +
+        "07466c6f61743332" + "04426f6f6c" + "0444617465" +
+        "084461746554696d65" + "084461746554696d65" +
+        "0655496e743634" + "0f4e756c6c61626c6528496e74363429" + // types
+        "0368c3a9" +                                   // "hé" (UTF-8)
+        "feffffffffffffff" +                           // Int64 -2
+        "04030201" +                                   // Int32 0x01020304
+        "fdff" + "07" +                                // Int16 -3, Int8 7
+        "000000000000f83f" + "000000c0" +              // 1.5, -2.0f
+        "01" +                                         // true
+        "554d" +                                       // Date: day 19797
+        "dc50f465" +                                   // DateTime 1710510300
+        "25c06e38" +                                   // NTZ as DateTime 946782245
+        "ffffffffffffffff" +                           // UInt64 2^64-1
+        "01"                                           // Nullable: NULL flag only
+    assert(hex == expected, s"\n got $hex\nwant $expected")
+  }
+
   test("LineAsString / JSONAsString / Regexp adopt text files as distributed scans") {
     GraftFunctions.ensureRegistered(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_textfmt")

@@ -805,13 +805,19 @@ class DdlSpec extends SparkSpec {
     // is not blocked by the exists-check
     val dirF = java.nio.file.Files.createTempDirectory("graft_ofail")
     val pf = dirF.resolve("fail.tsv")
-    intercept[Exception] {
-      ChDdl.execute(spark,
-        "SELECT CASE WHEN id < 5 THEN id ELSE CAST(raise_error('boom') " +
-          s"AS BIGINT) END AS v FROM range(10) INTO OUTFILE '$pf' FORMAT TSV")
+    Seq(pf -> "TSV", dirF.resolve("fail.native") -> "Native").foreach {
+      case (p, f) =>
+        intercept[Exception] {
+          ChDdl.execute(spark,
+            "SELECT CASE WHEN id < 5 THEN id ELSE CAST(raise_error('boom') " +
+              s"AS BIGINT) END AS v FROM range(10) INTO OUTFILE '$p' FORMAT $f")
+        }
+        assert(!java.nio.file.Files.exists(p),
+          s"partial $f OUTFILE survived the failure")
+        assert(!java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$p.idx")),
+          s"partial $f OUTFILE index survived the failure")
     }
-    assert(!java.nio.file.Files.exists(pf),
-      "partial OUTFILE survived the failure")
     ChDdl.execute(spark,
       s"SELECT id AS v FROM range(3) INTO OUTFILE '$pf' FORMAT TSV")
     assert(java.nio.file.Files.exists(pf), "retry after cleanup must work")
