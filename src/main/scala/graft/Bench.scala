@@ -301,10 +301,15 @@ object Bench {
     // sorted-key order (keys reconstructible from SparkEntry.queries;
     // -1 marks an error key). It fits the tail whole, so it parses.
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":{},"errors":$errJson,"sf":"$sfDir","iters":$iters,"median_rel_spread":$medSpread,"canary_s":$canaryS,"canary_io_s":$canaryIoS,"n_keys":${order.size},$vsFields,"medians_cs_sorted_keys":[${cs.mkString(",")}]}""")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "dev/bench_medians_last.json")), full)
-    catch { case e: Throwable =>
+    // the full line also lands in a file: SPARK_GRAFT_BENCH_OUT, or a
+    // gitignored default under target/ so a local run never rewrites
+    // a tracked file
+    try {
+      val out = java.nio.file.Paths.get(sys.env.getOrElse(
+        "SPARK_GRAFT_BENCH_OUT", "target/bench_medians_last.json"))
+      Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.writeString(out, full)
+    } catch { case e: Throwable =>
       Console.err.println(s"[bench] could not write medians file: ${e.getMessage}") }
     spark.stop()
   }

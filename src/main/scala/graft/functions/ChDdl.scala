@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import ChSql.{Tok, tokenize, renderTrim, depths, matchParen}
+import graft.sources.SingleFileFormats
 
 /** ClickHouse CREATE TABLE → Spark catalog table (reference:
   * src/Parsers/ASTCreateQuery.h:1 — the create grammar;
@@ -732,16 +733,6 @@ object ChDdl {
     Seq((id, status)).toDF("id", "status")
   }
 
-  // ---------- mutations (ASTAlterQuery.h) ----------
-
-  /** ALTER TABLE t DELETE WHERE p / ALTER TABLE t UPDATE c = e, … WHERE p
-    * (reference: src/Parsers/ASTAlterQuery.h:1 — CH "mutations").
-    * Realized as a snapshot-rewrite: the surviving/updated rows are
-    * staged to a scratch location and swapped into the table — a
-    * mutation rewrites whole parts in the reference too. At cluster
-    * scale the rewrite is restricted to AFFECTED partitions (dynamic
-    * partition overwrite on a predicate-pruned scan); here the staged
-    * write keeps the read-then-overwrite self-reference safe. */
   /** Source-adopting table functions (registerTableFunctions.cpp):
     * `file('path'[, 'Format'])` plus the remote-source family —
     * s3/gcs/hdfs/azureBlobStorage ride Spark's Hadoop FileSystem
@@ -755,24 +746,14 @@ object ChDdl {
     * temp view. Only a name followed by '(' whose first argument is
     * a string literal matches — a column or alias with these names
     * never trips it. */
-  private val adoptFormats = Set("PARQUET", "CSV", "CSVWITHNAMES",
-    "TSV", "TABSEPARATED", "TSVWITHNAMES", "TABSEPARATEDWITHNAMES",
-    "JSONEACHROW", "ORC", "AVRO", "ARROW", "ROWBINARY",
-    "ROWBINARYWITHNAMES", "ROWBINARYWITHNAMESANDTYPES",
-    "PROTOBUF", "PROTOBUFSINGLE", "RAWBLOB", "NATIVE", "MSGPACK",
+  private val adoptFormats = SingleFileFormats.names ++ Set("PARQUET",
+    "CSV", "CSVWITHNAMES", "TSV", "TABSEPARATED", "TSVWITHNAMES",
+    "TABSEPARATEDWITHNAMES", "JSONEACHROW", "ORC", "AVRO", "ARROW",
     "LINEASSTRING", "JSONASSTRING", "REGEXP", "TEMPLATE", "TSKV",
     "JSONCOMPACTEACHROW", "VALUES")
 
   private val adoptFns = Set("FILE", "S3", "GCS", "HDFS",
     "AZUREBLOBSTORAGE", "URL")
-
-  /** Formats whose adoption parses the whole file on the DRIVER —
-    * the set the adoption byte budget protects. Arrow left the set in
-    * r17: ArrowIpcSource splits by record batch (DSv2), nothing
-    * materializes on the driver. */
-  private val driverMaterializing = Set("PROTOBUF",
-    "PROTOBUFSINGLE", "RAWBLOB", "MSGPACK", "NATIVE",
-    "ROWBINARYWITHNAMESANDTYPES", "VALUES")
 
   /** The reference infers format from the path extension when the
     * argument is omitted (FormatFactory::getFormatFromFileName). */
@@ -785,10 +766,7 @@ object ChDdl {
     else if (p.endsWith(".orc")) "ORC"
     else if (p.endsWith(".avro")) "AVRO"
     else if (p.endsWith(".arrow")) "ARROW"
-    else if (p.endsWith(".native")) "NATIVE"
-    else if (p.endsWith(".pb") || p.endsWith(".protobuf")) "PROTOBUF"
-    else if (p.endsWith(".msgpack") || p.endsWith(".msgpk")) "MSGPACK"
-    else "PARQUET"
+    else SingleFileFormats.fromExtension(p).getOrElse("PARQUET")
   }
 
   /** A CH structure string ('a Int64, b Nullable(String)') → Spark
@@ -821,13 +799,12 @@ object ChDdl {
   private def readAdHoc(spark: SparkSession, path: String, up: String,
       fn: String, structure: Option[String] = None)
       : org.apache.spark.sql.DataFrame = {
-    // central byte budget for EVERY driver-materializing format (r16
-    // advice: Native/RowBinary/Values slipped past the per-branch
-    // guards) — url() already guarded its downloaded copy; a second
-    // size check is a no-op
-    if (driverMaterializing(up))
-      graft.sources.AdHocFiles.guardSize(spark, path, s"$fn($up)")
-    up match {
+    // the single-file formats parse on the DRIVER: their entry guards
+    // each with the adoption byte budget (as does the Values branch);
+    // Arrow splits by record batch (DSv2), nothing materializes there
+    if (SingleFileFormats.names(up))
+      SingleFileFormats.read(spark, path, up, fn, structure.map(structSchema))
+    else up match {
     case "PARQUET" => spark.read.parquet(path)
     case "CSV" | "CSVWITHNAMES" =>
       spark.read.option("header", (up == "CSVWITHNAMES").toString)
@@ -838,31 +815,9 @@ object ChDdl {
         .option("header", up.contains("WITHNAMES").toString)
         .option("inferSchema", "true").csv(path)
     case "JSONEACHROW" => spark.read.json(path)
-    case "ORC" => graft.sources.AdHocFiles.orc(spark, path)
+    case "ORC" => spark.read.orc(path)
     case "AVRO" => graft.sources.AdHocFiles.avro(spark, path)
     case "ARROW" => graft.sources.AdHocFiles.arrow(spark, path)
-    case "ROWBINARYWITHNAMESANDTYPES" => graft.sources.RowBinary.read(spark, path)
-    case "NATIVE" => graft.sources.NativeFormat.read(spark, path)
-    case "PROTOBUF" | "PROTOBUFSINGLE" =>
-      // the reference takes the schema via the format_schema setting
-      // (FormatSchemaInfo.cpp) — session-scoped here since adoption
-      // binds views at rewrite time: SET format_schema = 'f.proto:Msg'
-      val fs = spark.conf.get("spark.graft.format_schema", "")
-      require(fs.nonEmpty, s"$fn(): FORMAT $up needs a schema — " +
-        "SET format_schema = 'schema.proto:Message' first (the " +
-        "reference's format_schema setting)")
-      graft.sources.ProtobufFormat.read(spark, path, fs,
-        up == "PROTOBUFSINGLE")
-    case "RAWBLOB" =>
-      graft.sources.RawBlob.read(spark, path)
-    case "MSGPACK" =>
-      // positional format, no column names on the wire — the
-      // structure argument is mandatory (the reference's own
-      // file(path, format, structure) signature)
-      val st = structure.getOrElse(throw new IllegalArgumentException(
-        s"$fn(): MsgPack rows are positional — pass the structure, " +
-          "e.g. file('x.msgpack', 'MsgPack', 'a Int64, b String')"))
-      graft.sources.MsgPackFormat.read(spark, path, structSchema(st))
     case "LINEASSTRING" =>
       // registerFormats.cpp:72 — whole lines, one String column.
       // Rides spark.read.text: fully DISTRIBUTED (splits, pruning).
@@ -916,11 +871,6 @@ object ChDdl {
           (if (f.dataType == org.apache.spark.sql.types.StringType) g
            else g.cast(f.dataType)).as(f.name)
       }: _*)
-    case "ROWBINARY" | "ROWBINARYWITHNAMES" =>
-      throw new IllegalArgumentException(
-        s"$fn(): headerless $up carries no schema to adopt — write the " +
-          "file as RowBinaryWithNamesAndTypes (INTO OUTFILE … FORMAT " +
-          "RowBinaryWithNamesAndTypes) and adopt that")
     case "TSKV" =>
       // registerFormats.cpp:31-32's input side: key=value pairs,
       // tab-joined, fields in any order/subset. str_to_map keys the
@@ -967,7 +917,8 @@ object ChDdl {
       // input side): `(v1, v2), (v3, v4)` parses through the SAME
       // tokenizer + bracket rewrite the INSERT VALUES front door uses,
       // then Spark's own VALUES relation — driver-side by nature
-      // (the central adoption budget above guards this branch)
+      // (so the adoption byte budget guards it)
+      graft.sources.AdHocFiles.guardSize(spark, path, s"$fn($up)")
       val text = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), "UTF-8").trim
       require(text.nonEmpty, s"$fn(): empty Values file")
@@ -1061,8 +1012,7 @@ object ChDdl {
     case other => throw new IllegalArgumentException(
       s"$fn(): unsupported format '$other' (Parquet, ORC, Avro, " +
         "Arrow, CSV[WithNames], TSV/TabSeparated[WithNames], " +
-        "JSONEachRow, RowBinaryWithNamesAndTypes, Native, " +
-        "Protobuf[Single], RawBLOB)")
+        s"JSONEachRow, ${SingleFileFormats.listing})")
     }
   }
 
@@ -1102,13 +1052,10 @@ object ChDdl {
           .getOrElse(extFormat(args(0))), args.lift(2))
       case "URL" =>
         val local = fetchUrl(args(0))
-        val fmt = trailingFmt(args.drop(1)).getOrElse(extFormat(args(0)))
-        // the byte budget guards DRIVER-MATERIALIZING readers only —
-        // a fetched parquet/ORC/CSV temp file feeds a normal
-        // distributed spark.read and costs disk, not heap
-        if (driverMaterializing(fmt))
-          graft.sources.AdHocFiles.guardSize(spark, local, s"url($fmt)")
-        (local, fmt, None)
+        // the fetched temp file adopts like any local file: the
+        // driver-side readers guard it with the adoption byte budget;
+        // parquet/ORC/CSV feed a distributed spark.read
+        (local, trailingFmt(args.drop(1)).getOrElse(extFormat(args(0))), None)
       case "S3" | "GCS" =>
         // hadoop's S3 connector scheme is s3a://
         val path = if (args(0).startsWith("s3://"))
@@ -1284,6 +1231,19 @@ object ChDdl {
     }
   }
 
+  // ---------- mutations (ASTAlterQuery.h) ----------
+
+  /** ALTER TABLE t DELETE WHERE p / ALTER TABLE t UPDATE c = e, … WHERE p
+    * (reference: src/Parsers/ASTAlterQuery.h:1 — CH "mutations"),
+    * realized as a snapshot rewrite — a mutation rewrites whole parts
+    * in the reference too. The mutated rows are staged by an eager
+    * `localCheckpoint`, which keeps the read-then-overwrite
+    * self-reference safe without a durable scratch write. An
+    * unpartitioned table is overwritten whole. A partitioned table
+    * rewrites only the partitions the predicate touches, by dynamic
+    * partition overwrite; a DELETE that empties a partition then
+    * DROPs it, since dynamic overwrite skips partitions absent from
+    * the staged rows. */
   def alter(spark: SparkSession, sql: String): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val ts = tokenize(sql)._1
@@ -2206,71 +2166,22 @@ object ChDdl {
             // the operator's semantics, not a scale defect. Refuses an
             // existing file, exactly like the reference client.
             val f = fmt.getOrElse("TSV").toUpperCase
-            require(ChFormat.renderable(f) || graft.sources.RowBinary.names(f) ||
-              graft.sources.NativeFormat.names(f) ||
-              graft.sources.ProtobufFormat.names(f) || f == "RAWBLOB" ||
-              f == "MSGPACK",
+            require(ChFormat.renderable(f) || SingleFileFormats.names(f),
               s"INTO OUTFILE supports FORMAT ${ChFormat.renderable.mkString("/")}" +
-                s"/RowBinary[WithNames[AndTypes]]/Native/Protobuf[Single]" +
-                s"/RawBLOB/MsgPack, got $f")
-            val p = java.nio.file.Paths.get(path)
-            require(!java.nio.file.Files.exists(p),
-              s"INTO OUTFILE: file $path already exists (reference behavior)")
-            // streamed writers put bytes on disk BEFORE the plan has
-            // fully executed — a mid-write failure must not leave a
-            // partial file behind (the exists-check above would then
-            // block the retry)
-            def cleanupOnFailure[T](body: => T): T =
-              try body catch { case e: Throwable =>
-                java.nio.file.Files.deleteIfExists(p)
-                java.nio.file.Files.deleteIfExists(
-                  java.nio.file.Paths.get(path + ".idx"))
-                throw e
-              }
-            cleanupOnFailure { if (graft.sources.NativeFormat.names(f)) {
-              // the reference's own block format (NativeWriter.cpp),
-              // revision-0 file framing; COMPRESSION 'lz4'/'none'
-              // wraps it in the LZ4+CityHash compressed stream frames
-              // (CompressedWriteBuffer.cpp — the clickhouse-compressor
-              // form; file() auto-detects it on adoption)
-              // single name ('lz4'/'zstd'/'none'/'delta(w)'/…) or a
-              // comma chain ('delta(8), zstd') — chains frame as the
-              // reference's CODEC Multiple (CompressedFrames.parseChain)
-              val method = outComp.map(graft.sources.CompressedFrames.parseChain)
-              graft.sources.NativeFormat.write(df, path, method)
-            } else {
-              // COMPRESSION here would be the reference's file-level
-              // wrapper (gz/lz4-frame/zstd …) — a different layer than
-              // Native's internal block framing; refuse with guidance
-              // instead of silently writing plain bytes
-              require(outComp.isEmpty,
-                s"INTO OUTFILE COMPRESSION is supported for FORMAT Native " +
-                  s"(the reference's internal block framing); $f writes plain")
-              if (graft.sources.RowBinary.names(f))
-                // binary file interchange (not a line rendering): the
-                // RowBinary codec writes the file directly
-                graft.sources.RowBinary.write(df, path, f)
-              else if (graft.sources.ProtobufFormat.names(f)) {
-                // schema via the query's SETTINGS format_schema (the
-                // reference's placement) or the session's SET value
-                val fs = settings
-                  .find(_._1.equalsIgnoreCase("format_schema")).map(_._2)
-                  .getOrElse(spark.conf.get("spark.graft.format_schema", ""))
-                require(fs.nonEmpty, s"FORMAT $f needs a schema — add " +
-                  "SETTINGS format_schema = 'schema.proto:Message' " +
-                  "(the reference's format_schema setting)")
-                graft.sources.ProtobufFormat.write(df, path, fs,
-                  f == "PROTOBUFSINGLE")
-              } else if (f == "RAWBLOB")
-                graft.sources.RawBlob.write(df, path)
-              else if (f == "MSGPACK")
-                graft.sources.MsgPackFormat.write(df, path)
+                s", ${SingleFileFormats.listing}, got $f")
+            val codecs = SingleFileFormats.codecs(f, outComp)
+            SingleFileFormats.create(path, "INTO OUTFILE") {
+              if (SingleFileFormats.names(f))
+                // binary file interchange (not a line rendering); a
+                // Protobuf schema may come with the query's SETTINGS
+                SingleFileFormats.write(df, path, f, codecs, settings
+                  .find(_._1.equalsIgnoreCase("format_schema")).map(_._2))
               else {
                 // line renderings stream via toLocalIterator — the
                 // driver holds one partition of lines, not the full
                 // render (Pretty/JSON stay capped upstream anyway)
                 val out = new java.io.BufferedOutputStream(
-                  java.nio.file.Files.newOutputStream(p))
+                  java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path)))
                 try ChFormat.render(df, f, settings).toLocalIterator()
                   .forEachRemaining { r =>
                     out.write(r.getString(0).getBytes("UTF-8"))
@@ -2278,7 +2189,7 @@ object ChDdl {
                   }
                 finally out.close()
               }
-            } }
+            }
             df
           case None =>
             fmt.map(_.toUpperCase) match {

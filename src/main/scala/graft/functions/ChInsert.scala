@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import ChSql.{Tok, tokenize, render}
+import graft.sources.SingleFileFormats
 
 /** INSERT statements through the front door (reference:
   * src/Parsers/ASTInsertQuery.h:32 — table, columns, select, and the
@@ -229,11 +230,12 @@ object ChInsert {
     * file/s3/gcs/hdfs/azureBlobStorage write DISTRIBUTED through the
     * Hadoop FS layer (the path becomes a directory of part files —
     * the distributed write shape; file() reads it back transparently);
-    * RowBinary* is the driver-side single-file interchange writer.
-    * url() has no PUT transport here and refuses. PARTITION BY maps
-    * onto the writer's partitionBy when it names an output column —
-    * CH's {_partition_id}-in-key convention realized as partition
-    * directories, which is also what the read side prunes on. */
+    * the single-file interchange formats (SingleFileFormats) write
+    * one driver-side file. url() has no PUT transport here and
+    * refuses. PARTITION BY maps onto the writer's partitionBy when it
+    * names an output column — CH's {_partition_id}-in-key convention
+    * realized as partition directories, which is also what the read
+    * side prunes on. */
   private def insertIntoFunction(spark: SparkSession, ts: Vector[Tok],
       fnIdx: Int): Unit = {
     val fn = ts(fnIdx).up
@@ -284,35 +286,11 @@ object ChInsert {
     partitionBy.foreach(c => require(body.columns.contains(c),
       s"PARTITION BY $c: not an output column of the insert body"))
     fmt match {
-      case f if graft.sources.RowBinary.names(f) ||
-          graft.sources.NativeFormat.names(f) ||
-          graft.sources.ProtobufFormat.names(f) ||
-          f == "RAWBLOB" || f == "MSGPACK" =>
+      case f if SingleFileFormats.names(f) =>
         require(partitionBy.isEmpty,
           s"$f is a single-file interchange write — no PARTITION BY")
-        val p = java.nio.file.Paths.get(path)
-        require(!java.nio.file.Files.exists(p),
-          s"INSERT INTO FUNCTION: $path already exists (reference behavior)")
-        // streamed single-file writers: a mid-write failure must not
-        // leave a partial file that blocks the retry (the INTO OUTFILE
-        // discipline)
-        try {
-          if (graft.sources.NativeFormat.names(f))
-            graft.sources.NativeFormat.write(body, path)
-          else if (graft.sources.ProtobufFormat.names(f)) {
-            val fs = spark.conf.get("spark.graft.format_schema", "")
-            require(fs.nonEmpty, s"FORMAT $f needs a schema — SET " +
-              "format_schema = 'schema.proto:Message' first")
-            graft.sources.ProtobufFormat.write(body, path, fs,
-              f == "PROTOBUFSINGLE")
-          } else if (f == "RAWBLOB") graft.sources.RawBlob.write(body, path)
-          else if (f == "MSGPACK") graft.sources.MsgPackFormat.write(body, path)
-          else graft.sources.RowBinary.write(body, path, f)
-        } catch { case e: Throwable =>
-          java.nio.file.Files.deleteIfExists(p)
-          java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(path + ".idx"))
-          throw e
+        SingleFileFormats.create(path, "INSERT INTO FUNCTION") {
+          SingleFileFormats.write(body, path, f)
         }
       case other =>
         val w0 = body.write.mode("errorifexists")
@@ -330,8 +308,7 @@ object ChInsert {
           case f => throw new IllegalArgumentException(
             s"INSERT INTO FUNCTION: no writer for format '$f' (Parquet, " +
               "ORC, CSV[WithNames], TSV[WithNames], JSONEachRow, " +
-              "RowBinary[WithNames[AndTypes]], Native, Protobuf[Single], " +
-              "MsgPack, RawBLOB)")
+              s"${SingleFileFormats.listing})")
         }
     }
   }

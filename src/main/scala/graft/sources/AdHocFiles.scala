@@ -49,9 +49,6 @@ object AdHocFiles {
         "(s3/hdfs/file globs through spark.read)")
   }
 
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
   // ---------- Avro ----------
 
   private def avroField(s: org.apache.avro.Schema): (DataType, Boolean) = {

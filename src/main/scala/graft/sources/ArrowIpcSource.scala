@@ -27,8 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - column pruning is pushed down (SupportsPushDownRequiredColumns):
   *    a pruned ReadSchema converts only the required vectors.
   *
-  * Same primitive-type surface as the old driver-side reader
-  * (AdHocFiles.arrowField): nested/dictionary columns refuse with
+  * Primitive types only: nested/dictionary columns refuse with
   * parquet guidance. Reference surface: registerFormats.cpp Arrow
   * input; the reference's own reader also splits by record batch
   * (ArrowBlockInputFormat). */

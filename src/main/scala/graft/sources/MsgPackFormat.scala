@@ -249,15 +249,9 @@ object MsgPackFormat {
       java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))))
     try {
       val rows = Vector.newBuilder[Row]
-      var eof = false
-      while (!eof) {
-        in.mark(1)
-        if (in.read() < 0) eof = true
-        else {
-          in.reset()
-          rows += Row.fromSeq(schema.fields.toIndexedSeq.map(f =>
-            coerce(readValue(in), f.dataType, f.name)))
-        }
+      while (!ChBinary.atEnd(in)) {
+        rows += Row.fromSeq(schema.fields.toIndexedSeq.map(f =>
+          coerce(readValue(in), f.dataType, f.name)))
       }
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.result().asJava, schema)

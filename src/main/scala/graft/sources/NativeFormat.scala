@@ -1,11 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+
+import ChBinary.{atEnd, le, readLe, readString, readValue, readVarint, writeString, writeValue,
+  writeVarint}
 
 /** Native as a FILE interchange codec — the reference's own flagship
   * block format, revision-0 framing (no BlockInfo; the file-output
@@ -15,7 +16,8 @@ import org.apache.spark.sql.types._
   * Per block:
   *   varuint columns, varuint rows, then per column:
   *   name (varint-length string), CH type name (same encoding), and
-  *   the column's binary bulk data COLUMN-MAJOR
+  *   the column's binary bulk data COLUMN-MAJOR, each value in the
+  *   shared [[ChBinary]] encoding
   *   (NativeWriter.cpp:104-129 / NativeReader.cpp:113-160):
   *   - fixed-width numerics: contiguous little-endian values;
   *   - String: per value varuint byte-length + bytes
@@ -51,37 +53,16 @@ import org.apache.spark.sql.types._
   */
 object NativeFormat {
 
-  val names: Set[String] = Set("NATIVE")
-
   private val BlockRows = 65505 // reference DEFAULT_BLOCK_SIZE (Defines.h:20)
-
-  /** The full-range UInt64 carrier type (matches RowBinary / ChDdl). */
-  private val UInt64Carrier = DecimalType(20, 0)
-  private val U64Mod = java.math.BigInteger.ONE.shiftLeft(64)
+  private val Fmt = "Native"
 
   // ---------- CH type name ↔ Spark type ----------
 
-  private def chBase(dt: DataType): String = dt match {
-    case StringType => "String"
-    case LongType => "Int64"
-    case IntegerType => "Int32"
-    case ShortType => "Int16"
-    case ByteType => "Int8"
-    case DoubleType => "Float64"
-    case FloatType => "Float32"
-    case BooleanType => "Bool"
-    case DateType => "Date"
-    case TimestampType => "DateTime"
-    // NTZ (parquet timestamp[us] unadjusted) writes as DateTime too:
-    // sessions pin timeZone=UTC, so wall time ≡ instant and the read
-    // side's TimestampType is value-identical
-    case TimestampNTZType => "DateTime"
-    case d: DecimalType if d.precision == 20 && d.scale == 0 => "UInt64"
-    case other => throw new IllegalArgumentException(
-      s"Native: unsupported column type ${other.simpleString} — " +
+  private def chBase(dt: DataType): String = ChBinary.chName(dt).getOrElse(
+    throw new IllegalArgumentException(
+      s"Native: unsupported column type ${dt.simpleString} — " +
         "primitives, Nullable(primitive) and Array(primitive) only " +
-        "(interchange richer nesting via parquet)")
-  }
+        "(interchange richer nesting via parquet)"))
 
   /** Full CH type name for a column/element, Nullable-wrapped. */
   private def chName(dt: DataType, nullable: Boolean): String = dt match {
@@ -94,26 +75,11 @@ object NativeFormat {
       if (nullable) s"Nullable($n)" else n
   }
 
-  private def sparkBase(ch: String): DataType = ch match {
-    case "String" => StringType
-    case "Int64" => LongType
-    case "UInt64" => UInt64Carrier
-    case "Int32" => IntegerType
-    case "UInt32" => LongType
-    case "Int16" => ShortType
-    case "UInt16" => IntegerType
-    case "Int8" => ByteType
-    case "UInt8" => ShortType
-    case "Float64" => DoubleType
-    case "Float32" => FloatType
-    case "Bool" => BooleanType
-    case "Date" => DateType
-    case "DateTime" => TimestampType
-    case other => throw new IllegalArgumentException(
-      s"Native: unsupported type '$other' in block header — " +
+  private def sparkBase(ch: String): DataType = ChBinary.sparkType(ch).getOrElse(
+    throw new IllegalArgumentException(
+      s"Native: unsupported type '$ch' in block header — " +
         "String/Int*/UInt*/Float*/Bool/Date/DateTime, " +
-        "Nullable(…) and Array(…) thereof")
-  }
+        "Nullable(…) and Array(…) thereof"))
 
   /** Parse a CH type name into (sparkType, nullable). */
   private def parseCh(ch: String): (DataType, Boolean) =
@@ -126,48 +92,6 @@ object NativeFormat {
       val (elem, elemNullable) = parseCh(ch.substring(6, ch.length - 1))
       (ArrayType(elem, containsNull = elemNullable), false)
     } else (sparkBase(ch), false)
-
-  // ---------- low-level IO ----------
-
-  private def writeVarint(out: java.io.OutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  private def writeString(out: java.io.OutputStream, s: String): Unit = {
-    val b = s.getBytes(UTF_8)
-    writeVarint(out, b.length.toLong)
-    out.write(b)
-  }
-
-  private def le(n: Int): ByteBuffer =
-    ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-
-  private def readVarint(in: DataInputStream): Long = {
-    var v = 0L; var shift = 0
-    while (true) {
-      val b = in.read()
-      if (b < 0) throw new EOFException()
-      v |= (b.toLong & 0x7f) << shift
-      if ((b & 0x80) == 0) return v
-      shift += 7
-    }
-    v
-  }
-
-  private def readString(in: DataInputStream): String = {
-    val n = readVarint(in).toInt
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    new String(b, UTF_8)
-  }
-
-  private def readLe(in: DataInputStream, n: Int): ByteBuffer = {
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-  }
 
   // ---------- column-major bulk write ----------
 
@@ -190,39 +114,6 @@ object NativeFormat {
     case other => throw new IllegalStateException(s"unreachable: $other")
   }
 
-  private def writePrim(out: java.io.OutputStream, dt: DataType, v: Any): Unit =
-    dt match {
-      case StringType => writeString(out, v.asInstanceOf[String])
-      case LongType => out.write(le(8).putLong(v.asInstanceOf[Long]).array())
-      case IntegerType => out.write(le(4).putInt(v.asInstanceOf[Int]).array())
-      case ShortType => out.write(le(2).putShort(v.asInstanceOf[Short]).array())
-      case ByteType => out.write(v.asInstanceOf[Byte].toInt)
-      case DoubleType => out.write(le(8).putDouble(v.asInstanceOf[Double]).array())
-      case FloatType => out.write(le(4).putFloat(v.asInstanceOf[Float]).array())
-      case BooleanType => out.write(if (v.asInstanceOf[Boolean]) 1 else 0)
-      case DateType => // UInt16 days, clamped to CH Date range (1970..2149)
-        val days = v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay
-        val d = math.max(0L, math.min(0xffffL, days))
-        out.write(le(2).putShort(d.toShort).array())
-      case TimestampType => // UInt32 unix seconds, clamped (1970..2106)
-        val secs = v.asInstanceOf[java.sql.Timestamp].getTime / 1000L
-        val s = math.max(0L, math.min(0xffffffffL, secs))
-        out.write(le(4).putInt(s.toInt).array())
-      case TimestampNTZType =>
-        val secs = v.asInstanceOf[java.time.LocalDateTime]
-          .toEpochSecond(java.time.ZoneOffset.UTC)
-        val s = math.max(0L, math.min(0xffffffffL, secs))
-        out.write(le(4).putInt(s.toInt).array())
-      case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-        // UInt64: the unsigned 64-bit pattern of the decimal value
-        val bi = (v match {
-          case jd: java.math.BigDecimal => jd.toBigInteger
-          case sd: scala.math.BigDecimal => sd.toBigInt.bigInteger
-        }).mod(U64Mod)
-        out.write(le(8).putLong(bi.longValue).array())
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
-
   /** One column's bulk data for a block of rows (recursive on type). */
   private def writeBulk(out: java.io.OutputStream, dt: DataType,
       nullable: Boolean, values: IndexedSeq[Any]): Unit = dt match {
@@ -242,11 +133,11 @@ object NativeFormat {
       if (nullable) {
         values.foreach(v => out.write(if (v == null) 1 else 0))
         val dflt = defaultOf(prim)
-        values.foreach(v => writePrim(out, prim, if (v == null) dflt else v))
+        values.foreach(v => writeValue(out, prim, if (v == null) dflt else v))
       } else {
         values.foreach { v =>
           require(v != null, "NULL in non-nullable Native column")
-          writePrim(out, prim, v)
+          writeValue(out, prim, v)
         }
       }
   }
@@ -324,48 +215,29 @@ object NativeFormat {
 
   // ---------- column-major bulk read ----------
 
-  private def readPrim(in: DataInputStream, dt: DataType): Any = dt match {
-    case StringType => readString(in)
-    case LongType => readLe(in, 8).getLong
-    case IntegerType => readLe(in, 4).getInt
-    case ShortType => readLe(in, 2).getShort
-    case ByteType => in.readByte()
-    case DoubleType => readLe(in, 8).getDouble
-    case FloatType => readLe(in, 4).getFloat
-    case BooleanType => in.readByte() != 0
-    case DateType =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-        (readLe(in, 2).getShort.toInt & 0xffff).toLong))
-    case TimestampType =>
-      new java.sql.Timestamp((readLe(in, 4).getInt.toLong & 0xffffffffL) * 1000L)
-    case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-      val raw = readLe(in, 8).getLong
-      new java.math.BigDecimal(
-        new java.math.BigInteger(java.lang.Long.toUnsignedString(raw)))
-    case other => throw new IllegalStateException(s"unreachable: $other")
-  }
-
-  /** One column's bulk data for `rows` rows (recursive on type). */
-  private def readBulk(in: DataInputStream, dt: DataType,
-      nullable: Boolean, rows: Int): IndexedSeq[Any] = dt match {
-    case ArrayType(elem, containsNull) =>
+  /** One column's bulk data for `rows` rows, decoded by its CH type
+    * name (recursive; parseCh has validated the name). Keyed by the
+    * name, not the Spark carrier: UInt32 and Int64 share a carrier but
+    * not a width. */
+  private def readBulk(in: DataInputStream, ch: String,
+      rows: Int): IndexedSeq[Any] =
+    if (ch.startsWith("Array(")) {
       val ends = (0 until rows).map(_ => readLe(in, 8).getLong)
       val total = if (rows == 0) 0L else ends.last
       require(total <= Int.MaxValue, s"Native: array block too large ($total)")
-      val flat = readBulk(in, elem, containsNull, total.toInt)
+      val flat = readBulk(in, ch.substring(6, ch.length - 1), total.toInt)
       var prev = 0L
       ends.map { e =>
         val slice = flat.slice(prev.toInt, e.toInt)
         prev = e
         slice
       }
-    case prim =>
-      if (nullable) {
-        val nulls = (0 until rows).map(_ => in.readByte() != 0)
-        val data = (0 until rows).map(_ => readPrim(in, prim))
-        (0 until rows).map(i => if (nulls(i)) null else data(i))
-      } else (0 until rows).map(_ => readPrim(in, prim))
-  }
+    } else if (ch.startsWith("Nullable(")) {
+      val inner = ch.substring(9, ch.length - 1)
+      val nulls = (0 until rows).map(_ => in.readByte() != 0)
+      val data = (0 until rows).map(_ => readValue(in, inner, Fmt))
+      (0 until rows).map(i => if (nulls(i)) null else data(i))
+    } else (0 until rows).map(_ => readValue(in, ch, Fmt))
 
   /** Adopt a Native file as a DataFrame (driver-side parse; the block
     * headers make the file self-describing). Schema comes from the
@@ -384,38 +256,32 @@ object NativeFormat {
     try {
       var schema: StructType = null
       val rowsOut = Vector.newBuilder[Row]
-      var eof = false
-      while (!eof) {
-        in.mark(1)
-        if (in.read() < 0) eof = true
-        else {
-          in.reset()
-          val ncols = readVarint(in).toInt
-          require(ncols > 0 && ncols < 100000, s"Native block: $ncols columns")
-          val nrows = readVarint(in).toInt
-          require(nrows >= 0 && nrows <= 10000000, s"Native block: $nrows rows")
-          val cols = new Array[IndexedSeq[Any]](ncols)
-          val fields = new Array[StructField](ncols)
-          var i = 0
-          while (i < ncols) {
-            val name = readString(in)
-            val tpe = readString(in)
-            val (dt, nullable) = parseCh(tpe)
-            fields(i) = StructField(name, dt, nullable)
-            cols(i) =
-              if (nrows > 0) readBulk(in, dt, nullable, nrows)
-              else IndexedSeq.empty
-            i += 1
-          }
-          val blockSchema = StructType(fields.toIndexedSeq)
-          if (schema == null) schema = blockSchema
-          else require(schema == blockSchema,
-            s"Native: block schema mismatch ($blockSchema vs $schema)")
-          var r = 0
-          while (r < nrows) {
-            rowsOut += Row.fromSeq((0 until ncols).map(c => cols(c)(r)))
-            r += 1
-          }
+      while (!atEnd(in)) {
+        val ncols = readVarint(in, Fmt).toInt
+        require(ncols > 0 && ncols < 100000, s"Native block: $ncols columns")
+        val nrows = readVarint(in, Fmt).toInt
+        require(nrows >= 0 && nrows <= 10000000, s"Native block: $nrows rows")
+        val cols = new Array[IndexedSeq[Any]](ncols)
+        val fields = new Array[StructField](ncols)
+        var i = 0
+        while (i < ncols) {
+          val name = readString(in, Fmt)
+          val tpe = readString(in, Fmt)
+          val (dt, nullable) = parseCh(tpe)
+          fields(i) = StructField(name, dt, nullable)
+          cols(i) =
+            if (nrows > 0) readBulk(in, tpe, nrows)
+            else IndexedSeq.empty
+          i += 1
+        }
+        val blockSchema = StructType(fields.toIndexedSeq)
+        if (schema == null) schema = blockSchema
+        else require(schema == blockSchema,
+          s"Native: block schema mismatch ($blockSchema vs $schema)")
+        var r = 0
+        while (r < nrows) {
+          rowsOut += Row.fromSeq((0 until ncols).map(c => cols(c)(r)))
+          r += 1
         }
       }
       require(schema != null, s"Native: empty file $path (no header block)")
@@ -460,16 +326,16 @@ object NativeFormat {
       ch.position(loc.mark.offsetCompressed)
       val in = new DataInputStream(new BufferedInputStream(
         java.nio.channels.Channels.newInputStream(ch)))
-      val name = readString(in)
+      val name = readString(in, Fmt)
       require(name == loc.name,
         "Index points to column with wrong name: corrupted index or data")
-      val tpe = readString(in)
+      val tpe = readString(in, Fmt)
       require(tpe == loc.tpe,
         "Index points to column with wrong type: corrupted index or data")
       val (dt, nullable) = parseCh(tpe)
       colsDecoded += 1
       (StructField(name, dt, nullable),
-        if (rows > 0) readBulk(in, dt, nullable, rows) else IndexedSeq.empty)
+        if (rows > 0) readBulk(in, tpe, rows) else IndexedSeq.empty)
     }
 
     try {

@@ -1,9 +1,8 @@
 package graft.sources
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, OutputStream}
-import java.nio.ByteBuffer
-import java.nio.ByteOrder
-import java.nio.charset.StandardCharsets.UTF_8
+
+import ChBinary.{atEnd, le, readLe, readString, readVarint, writeString, writeVarint}
 
 /** The block index over Native files (reference:
   * src/Formats/IndexForNativeFormat.cpp:1-91 — the same byte layout,
@@ -49,23 +48,9 @@ object NativeIndex {
 
   def sidecarPath(nativePath: String): String = nativePath + ".idx"
 
-  // ---------- io (same varint/string encoding as the data file) ----------
+  // ---------- io (the data file's ChBinary varints and strings) ----------
 
-  private def writeVarint(out: OutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  private def writeString(out: OutputStream, s: String): Unit = {
-    val b = s.getBytes(UTF_8)
-    writeVarint(out, b.length.toLong)
-    out.write(b)
-  }
-
-  private def writeU64(out: OutputStream, v: Long): Unit =
-    out.write(ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      .putLong(v).array())
+  private val Fmt = "Native index"
 
   def write(path: String, blocks: Seq[BlockIndex]): Unit = {
     val out = new BufferedOutputStream(
@@ -76,35 +61,10 @@ object NativeIndex {
       b.columns.foreach { c =>
         writeString(out, c.name)
         writeString(out, c.tpe)
-        writeU64(out, c.mark.offsetCompressed)
-        writeU64(out, c.mark.offsetDecompressed)
+        out.write(le(8).putLong(c.mark.offsetCompressed).array())
+        out.write(le(8).putLong(c.mark.offsetDecompressed).array())
       }
     } finally out.close()
-  }
-
-  private def readVarint(in: DataInputStream): Long = {
-    var v = 0L; var shift = 0
-    while (true) {
-      val b = in.read()
-      if (b < 0) throw new java.io.EOFException()
-      v |= (b.toLong & 0x7f) << shift
-      if ((b & 0x80) == 0) return v
-      shift += 7
-    }
-    v
-  }
-
-  private def readString(in: DataInputStream): String = {
-    val n = readVarint(in).toInt
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    new String(b, UTF_8)
-  }
-
-  private def readU64(in: DataInputStream): Long = {
-    val b = new Array[Byte](8)
-    in.readFully(b)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getLong
   }
 
   /** Whole-index read: blocks until EOF (IndexForNativeFormat::read). */
@@ -113,24 +73,18 @@ object NativeIndex {
       java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))))
     try {
       val blocks = Vector.newBuilder[BlockIndex]
-      var eof = false
-      while (!eof) {
-        in.mark(1)
-        if (in.read() < 0) eof = true
-        else {
-          in.reset()
-          val ncols = readVarint(in).toInt
-          require(ncols > 0 && ncols < 100000, s"Native index: $ncols columns")
-          val nrows = readVarint(in)
-          val cols = Vector.newBuilder[ColumnLoc]
-          var i = 0
-          while (i < ncols) {
-            cols += ColumnLoc(readString(in), readString(in),
-              Mark(readU64(in), readU64(in)))
-            i += 1
-          }
-          blocks += BlockIndex(nrows, cols.result())
+      while (!atEnd(in)) {
+        val ncols = readVarint(in, Fmt).toInt
+        require(ncols > 0 && ncols < 100000, s"Native index: $ncols columns")
+        val nrows = readVarint(in, Fmt)
+        val cols = Vector.newBuilder[ColumnLoc]
+        var i = 0
+        while (i < ncols) {
+          cols += ColumnLoc(readString(in, Fmt), readString(in, Fmt),
+            Mark(readLe(in, 8).getLong, readLe(in, 8).getLong))
+          i += 1
         }
+        blocks += BlockIndex(nrows, cols.result())
       }
       blocks.result()
     } finally in.close()

@@ -1,11 +1,15 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, EOFException}
+import java.io.{BufferedOutputStream, ByteArrayOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+
+// Google's 1..10-byte varint (ProtobufWriter.cpp:18-26) is the same
+// LEB128 ClickHouse writes, so the writer shares ChBinary's
+import ChBinary.{le, writeVarint}
 
 /** Protobuf as a FILE interchange format (reference:
   * src/Formats/ProtobufReader.cpp:17-25 wire types and varint/zigzag
@@ -38,8 +42,6 @@ import org.apache.spark.sql.types._
   * streams partition-by-partition (toLocalIterator), never holding
   * the full result on the driver. */
 object ProtobufFormat {
-
-  val names: Set[String] = Set("PROTOBUF", "PROTOBUFSINGLE")
 
   // ---------- proto3 schema ----------
 
@@ -128,18 +130,8 @@ object ProtobufFormat {
   private final val WtGroupEnd = 4
   private final val WtBits32 = 5
 
-  /** Google's 1..10-byte varint (ProtobufWriter.cpp:18-26). */
-  private def writeVarint(out: java.io.OutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
   private def zigzag64(n: Long): Long = (n << 1) ^ (n >> 63)
   private def unzigzag64(n: Long): Long = (n >>> 1) ^ -(n & 1L)
-
-  private def le(n: Int): ByteBuffer =
-    ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
 
   // ---------- write ----------
 

@@ -1,18 +1,16 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import ChBinary.{atEnd, readString, readValue, readVarint, writeString, writeValue, writeVarint}
+
 /** RowBinary[WithNames[AndTypes]] as a FILE interchange codec
-  * (reference: src/Formats/registerFormats.cpp RowBinary entries;
-  * encoding per the public format spec — little-endian fixed-width
-  * numerics, LEB128-varint-length strings, UInt16-days Dates,
-  * UInt32-seconds DateTimes, one 0/1 flag byte before each Nullable
-  * value with nothing following a NULL).
+  * (reference: src/Formats/registerFormats.cpp RowBinary entries):
+  * rows of values in the shared [[ChBinary]] encoding, one 0/1 flag
+  * byte before each Nullable value with nothing following a NULL.
   *
   * RowBinary is a client wire format, but reference users also pass
   * .bin files around with it — so INTO OUTFILE writes it and file()
@@ -26,105 +24,18 @@ import org.apache.spark.sql.types._
   * makes a file self-describing, so the READ side requires it. */
 object RowBinary {
 
-  val names: Set[String] = Set("ROWBINARY", "ROWBINARYWITHNAMES",
-    "ROWBINARYWITHNAMESANDTYPES")
+  private def chName(dt: DataType): String = ChBinary.chName(dt).getOrElse(
+    throw new IllegalArgumentException(
+      s"RowBinary: unsupported column type ${dt.simpleString} — " +
+        "flat primitive schemas only (interchange nested data via parquet)"))
 
-  // ---------- CH type name ↔ Spark type ----------
+  private def sparkType(ch: String): DataType = ChBinary.sparkType(ch).getOrElse(
+    throw new IllegalArgumentException(
+      s"RowBinary: unsupported type '$ch' in header — flat " +
+        "primitives only (String/Int*/UInt*/Float*/Bool/Date/DateTime)"))
 
-  private def chName(dt: DataType): String = dt match {
-    case StringType => "String"
-    case LongType => "Int64"
-    case IntegerType => "Int32"
-    case ShortType => "Int16"
-    case ByteType => "Int8"
-    case DoubleType => "Float64"
-    case FloatType => "Float32"
-    case BooleanType => "Bool"
-    case DateType => "Date"
-    case TimestampType => "DateTime"
-    // NTZ (parquet timestamp[us] unadjusted): sessions pin UTC, so
-    // wall time ≡ instant — writes as DateTime like TimestampType
-    case TimestampNTZType => "DateTime"
-    // the engine's full-range UInt64 carrier writes back as UInt64
-    case d: DecimalType if d.precision == 20 && d.scale == 0 => "UInt64"
-    case other => throw new IllegalArgumentException(
-      s"RowBinary: unsupported column type ${other.simpleString} — " +
-        "flat primitive schemas only (interchange nested data via parquet)")
-  }
-
-  private def sparkType(ch: String): DataType = ch match {
-    case "String" => StringType
-    case "Int64" => LongType
-    case "UInt64" => DecimalType(20, 0) // the full-range carrier
-    case "Int32" => IntegerType
-    case "UInt32" => LongType
-    case "Int16" => ShortType
-    case "UInt16" => IntegerType
-    case "Int8" => ByteType
-    case "UInt8" => ShortType
-    case "Float64" => DoubleType
-    case "Float32" => FloatType
-    case "Bool" => BooleanType
-    case "Date" => DateType
-    case "DateTime" => TimestampType
-    case other => throw new IllegalArgumentException(
-      s"RowBinary: unsupported type '$other' in header — flat " +
-        "primitives only (String/Int*/UInt*/Float*/Bool/Date/DateTime)")
-  }
-
-  // ---------- write ----------
-
-  private def writeVarint(out: java.io.OutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  private def writeString(out: java.io.OutputStream, s: String): Unit = {
-    val b = s.getBytes(UTF_8)
-    writeVarint(out, b.length.toLong)
-    out.write(b)
-  }
-
-  private def le(n: Int): ByteBuffer =
-    ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-
-  private def writeValue(out: java.io.OutputStream, dt: DataType, v: Any): Unit =
-    dt match {
-      case StringType => writeString(out, v.asInstanceOf[String])
-      case LongType => out.write(le(8).putLong(v.asInstanceOf[Long]).array())
-      case IntegerType => out.write(le(4).putInt(v.asInstanceOf[Int]).array())
-      case ShortType => out.write(le(2).putShort(v.asInstanceOf[Short]).array())
-      case ByteType => out.write(v.asInstanceOf[Byte].toInt)
-      case DoubleType => out.write(le(8).putDouble(v.asInstanceOf[Double]).array())
-      case FloatType => out.write(le(4).putFloat(v.asInstanceOf[Float]).array())
-      case BooleanType => out.write(if (v.asInstanceOf[Boolean]) 1 else 0)
-      case DateType => // UInt16 days since epoch, clamped to the CH
-        // Date range (1970..2149) like the reference's saturating cast
-        val days = v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay
-        val d = math.max(0L, math.min(0xffffL, days))
-        out.write(le(2).putShort(d.toShort).array())
-      case TimestampType => // UInt32 unix seconds, clamped (CH DateTime
-        // range 1970..2106)
-        val secs = v.asInstanceOf[java.sql.Timestamp].getTime / 1000L
-        val s = math.max(0L, math.min(0xffffffffL, secs))
-        out.write(le(4).putInt(s.toInt).array())
-      case TimestampNTZType =>
-        val secs = v.asInstanceOf[java.time.LocalDateTime]
-          .toEpochSecond(java.time.ZoneOffset.UTC)
-        val s = math.max(0L, math.min(0xffffffffL, secs))
-        out.write(le(4).putInt(s.toInt).array())
-      case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-        // UInt64: the unsigned 64-bit bit pattern of the decimal value
-        val bi = (v match {
-          case jd: java.math.BigDecimal => jd.toBigInteger
-          case sd: scala.math.BigDecimal => sd.toBigInt.bigInteger
-        }).mod(java.math.BigInteger.ONE.shiftLeft(64))
-        out.write(le(8).putLong(bi.longValue).array())
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
-
-  /** Write df to a single local file. `variant` ∈ names. Driver-side
+  /** Write df to a single local file. `variant` is RowBinary,
+    * RowBinaryWithNames or RowBinaryWithNamesAndTypes. Driver-side
     * single file (the INTO OUTFILE client-sink contract), streamed
     * partition-by-partition. */
   def write(df: DataFrame, path: String, variant: String): Unit = {
@@ -164,55 +75,6 @@ object RowBinary {
 
   // ---------- read ----------
 
-  private def readVarint(in: DataInputStream): Long = {
-    var v = 0L; var shift = 0
-    while (true) {
-      val b = in.read()
-      if (b < 0) throw new EOFException()
-      v |= (b.toLong & 0x7f) << shift
-      if ((b & 0x80) == 0) return v
-      shift += 7
-    }
-    v
-  }
-
-  private def readString(in: DataInputStream): String = {
-    val n = readVarint(in).toInt
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    new String(b, UTF_8)
-  }
-
-  private def readLe(in: DataInputStream, n: Int): ByteBuffer = {
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-  }
-
-  private def readValue(in: DataInputStream, ch: String): Any = ch match {
-    case "String" => readString(in)
-    case "Int64" => readLe(in, 8).getLong
-    case "UInt64" =>
-      val raw = readLe(in, 8).getLong
-      val big = new java.math.BigInteger(java.lang.Long.toUnsignedString(raw))
-      new java.math.BigDecimal(big)
-    case "Int32" => readLe(in, 4).getInt
-    case "UInt32" => readLe(in, 4).getInt.toLong & 0xffffffffL
-    case "Int16" => readLe(in, 2).getShort
-    case "UInt16" => readLe(in, 2).getShort.toInt & 0xffff
-    case "Int8" => in.readByte()
-    case "UInt8" => (in.readByte().toInt & 0xff).toShort
-    case "Float64" => readLe(in, 8).getDouble
-    case "Float32" => readLe(in, 4).getFloat
-    case "Bool" => in.readByte() != 0
-    case "Date" =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-        (readLe(in, 2).getShort.toInt & 0xffff).toLong))
-    case "DateTime" =>
-      new java.sql.Timestamp((readLe(in, 4).getInt.toLong & 0xffffffffL) * 1000L)
-    case other => throw new IllegalStateException(s"unreachable: $other")
-  }
-
   /** Adopt a RowBinaryWithNamesAndTypes file as a DataFrame
     * (driver-side parse; the header makes the file self-describing).
     * The headerless variants cannot be adopted without a schema — the
@@ -221,10 +83,10 @@ object RowBinary {
     val in = new DataInputStream(new BufferedInputStream(
       java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))))
     try {
-      val ncols = readVarint(in).toInt
+      val ncols = readVarint(in, "RowBinary").toInt
       require(ncols > 0 && ncols < 100000, s"RowBinary header: $ncols columns")
-      val colNames = (0 until ncols).map(_ => readString(in))
-      val rawTypes = (0 until ncols).map(_ => readString(in))
+      val colNames = (0 until ncols).map(_ => readString(in, "RowBinary"))
+      val rawTypes = (0 until ncols).map(_ => readString(in, "RowBinary"))
       val nullable = rawTypes.map(_.startsWith("Nullable("))
       val base = rawTypes.map(t =>
         if (t.startsWith("Nullable(")) t.stripPrefix("Nullable(").stripSuffix(")")
@@ -233,22 +95,15 @@ object RowBinary {
         case ((n, t), nl) => StructField(n, sparkType(t), nl)
       })
       val rows = Vector.newBuilder[Row]
-      var eof = false
-      while (!eof) {
-        // probe one byte for EOF between rows
-        in.mark(1)
-        if (in.read() < 0) eof = true
-        else {
-          in.reset()
-          val vals = new Array[Any](ncols)
-          var i = 0
-          while (i < ncols) {
-            if (nullable(i) && in.readByte() != 0) vals(i) = null
-            else vals(i) = readValue(in, base(i))
-            i += 1
-          }
-          rows += Row.fromSeq(vals.toIndexedSeq)
+      while (!atEnd(in)) {
+        val vals = new Array[Any](ncols)
+        var i = 0
+        while (i < ncols) {
+          if (nullable(i) && in.readByte() != 0) vals(i) = null
+          else vals(i) = readValue(in, base(i), "RowBinary")
+          i += 1
         }
+        rows += Row.fromSeq(vals.toIndexedSeq)
       }
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.result()), schema)
