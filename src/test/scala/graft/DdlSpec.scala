@@ -9,6 +9,15 @@ import graft.sources.Tables
 class DdlSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The rewrite stages left under the warehouse's `__graft_stage__`. */
+  private def stageEntries: Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), "__graft_stage__")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) fs.listStatus(root).map(_.getPath.getName).toSeq
+    else Nil
+  }
+
   test("type mapping covers the DataTypeFactory names") {
     val ct = ChDdl.parse(
       """CREATE TABLE IF NOT EXISTS db.t (
@@ -227,6 +236,7 @@ class DdlSpec extends SparkSpec {
     assert(e.getMessage.contains("mutation boom"), e.getMessage)
     assert(spark.sharedState.cacheManager.isEmpty,
       "the failed mutation left its affected-partition pre-scan cached")
+    assert(stageEntries.isEmpty, s"the failed mutation left a stage: $stageEntries")
     assert(spark.table("graft_mut_fail").count() == 20)
   }
 
