@@ -246,13 +246,7 @@ object ChDdl {
       // CH type names and clauses
       ChDdl.createdTables.put(table.toLowerCase, this)
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      // a managed-table location can survive from a PREVIOUS session
-      // (in-memory catalog, on-disk warehouse) — DROP above can't see
-      // it, CREATE refuses over it; clear the orphan
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      clearOrphanLocation(spark, table)
       spark.sql(sparkDdl)
     }
 
@@ -301,10 +295,7 @@ object ChDdl {
       val projTable = s"${table}__proj_${p.name}"
       val pdf = source.groupBy(p.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
       spark.sql(s"DROP TABLE IF EXISTS $projTable")
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = new org.apache.hadoop.fs.Path(wh, projTable.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      clearOrphanLocation(spark, projTable)
       pdf.write.mode("overwrite").format("parquet").saveAsTable(projTable)
       graft.plans.ProjectionCatalog.register(graft.plans.ProjectionCatalog.Proj(
         table, projTable, p.keys,
@@ -462,6 +453,15 @@ object ChDdl {
     new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
 
+  /** Delete a managed-table location the catalog no longer knows: it
+    * can survive from a previous session (in-memory catalog, on-disk
+    * warehouse), where DROP cannot see it and CREATE refuses over it. */
+  private[functions] def clearOrphanLocation(spark: SparkSession, table: String): Unit = {
+    val loc = warehousePath(spark, table)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
   /** DETACH TABLE t: forget the catalog entry, KEEP the data (the
     * reference detaches the metadata and leaves parts on disk). The
     * data directory is moved to a `__detached__` stash first so the
@@ -471,17 +471,13 @@ object ChDdl {
     val schema = spark.table(name).schema // also: fails fast if missing
     val partCols = spark.catalog.listColumns(name).collect()
       .filter(_.isPartition).map(_.name).toSeq
-    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $name").collect()
-      .find(_.getString(0) == "Location").map(_.getString(1))
-      .getOrElse(throw new IllegalStateException(s"no Location for $name"))
-    val locPath = new org.apache.hadoop.fs.Path(loc)
+    val locPath = tableLocation(spark, name)
     val fs = locPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stash = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"__detached__/${name.toLowerCase}")
+    val stash = warehousePath(spark, s"__detached__/$name")
     if (fs.exists(stash)) fs.delete(stash, true)
     fs.mkdirs(stash.getParent)
-    require(fs.exists(locPath), s"table $name has no data directory at $loc")
-    require(fs.rename(locPath, stash), s"could not stash $loc")
+    require(fs.exists(locPath), s"table $name has no data directory at $locPath")
+    require(fs.rename(locPath, stash), s"could not stash $locPath")
     fs.mkdirs(locPath) // DROP TABLE deletes this empty husk, not the data
     spark.sql(s"DROP TABLE $name")
     detachedTables.put(name.toLowerCase, Detached(
@@ -1217,18 +1213,44 @@ object ChDdl {
           layout.map(l => l.copy(cols = l.cols.map(c =>
             if (c.name == nc.name) nc else c))))
     }
-    // stage: the read-then-recreate self-reference needs the tmp hop
-    val tmp = java.nio.file.Files.createTempDirectory("graft_altercol").toString
-    out.write.mode("overwrite").parquet(tmp)
-    val staged = spark.read.schema(out.schema).parquet(tmp)
-    newLayout match {
-      case Some(nl) =>
-        nl.create(spark)
-        nl.insertSelect(spark, staged.drop("__sample_hash"))
-      case None =>
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        staged.write.saveAsTable(table)
+    // the recreate drops the table the rows are read from
+    stagedRewrite(spark, out) { staged =>
+      newLayout match {
+        case Some(nl) =>
+          nl.create(spark)
+          nl.insertSelect(spark, staged.drop("__sample_hash"))
+        case None =>
+          spark.sql(s"DROP TABLE IF EXISTS $table")
+          staged.write.saveAsTable(table)
+      }
     }
+  }
+
+  // ---------- the rewrite stage (mutations, merges, layout changes) ----------
+
+  /** Rewrite a table from its own rows, as a reference mutation or
+    * merge writes new parts before dropping the old. `rows` is written
+    * once, as parquet, to a fresh `__graft_stage__/<uuid>` under the
+    * warehouse: durable (a lost executor loses nothing) and outside
+    * every table, so a drop-and-recreate cannot delete it. `write`
+    * gets it read back with `rows`' schema (an emptied stage still
+    * reads) and overwrites, drops or recreates the table. The stage is
+    * deleted once `write` returns, and after a failed stage write. A
+    * failed `write` keeps it and names it in a suppressed exception:
+    * once the overwrite has begun deleting, it is the only copy. */
+  private[graft] def stagedRewrite(spark: SparkSession, rows: DataFrame)(
+      write: DataFrame => Unit): Unit = {
+    val stage = warehousePath(spark, s"__graft_stage__/${java.util.UUID.randomUUID()}")
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try rows.write.parquet(stage.toString)
+    catch { case e: Throwable => fs.delete(stage, true); throw e }
+    try write(spark.read.schema(rows.schema).parquet(stage.toString))
+    catch { case e: Throwable =>
+      e.addSuppressed(new IllegalStateException(
+        s"the rewritten rows are kept at $stage"))
+      throw e
+    }
+    fs.delete(stage, true)
   }
 
   // ---------- mutations (ASTAlterQuery.h) ----------
@@ -1236,9 +1258,7 @@ object ChDdl {
   /** ALTER TABLE t DELETE WHERE p / ALTER TABLE t UPDATE c = e, … WHERE p
     * (reference: src/Parsers/ASTAlterQuery.h:1 — CH "mutations"),
     * realized as a snapshot rewrite — a mutation rewrites whole parts
-    * in the reference too. The mutated rows are staged by an eager
-    * `localCheckpoint`, which keeps the read-then-overwrite
-    * self-reference safe without a durable scratch write. An
+    * in the reference too — through [[stagedRewrite]]. An
     * unpartitioned table is overwritten whole. A partitioned table
     * rewrites only the partitions the predicate touches, by dynamic
     * partition overwrite; a DELETE that empties a partition then
@@ -1310,18 +1330,10 @@ object ChDdl {
     val whereToks = ts.drop(ChSql.find0(ts, Set("WHERE"), i) + 1)
     val predCol = expr(renderTrim(whereToks))
     if (partCols.isEmpty) {
-      // unpartitioned table: a mutation rewrites the snapshot, staged
-      // so the read-then-overwrite self-reference is safe. The stage
-      // is an EAGER localCheckpoint (executor memory/disk blocks, r20)
-      // instead of a durable tmp-parquet write + read-back: one fewer
-      // full write+read of the mutated rows per mutation. Safety is
-      // unchanged — a lost checkpoint block fails the job BEFORE the
-      // overwrite commits (the write stages and commits atomically),
-      // it can never silently recompute from already-overwritten files
-      // the way a persist() would.
-      mutated.localCheckpoint()
-        .select(outCols.map(col): _*)
-        .write.mode("overwrite").insertInto(table)
+      // unpartitioned table: the staged snapshot overwrites it whole
+      stagedRewrite(spark, mutated.select(outCols.map(col): _*)) {
+        _.write.mode("overwrite").insertInto(table)
+      }
     } else {
       // PARTITIONED table: restrict the rewrite to the partitions the
       // predicate actually touches. At 100 TB "delete these ids from
@@ -1338,35 +1350,27 @@ object ChDdl {
       // released on every path: a SET or predicate that fails at run
       // time must not leave the pre-scan cached in the session
       try if (!affectedDf.isEmpty) {
-        // same localCheckpoint staging as the unpartitioned branch
-        // (r20): the affected-partition rewrite no longer pays a
-        // durable tmp write + read-back, and an all-rows-deleted
-        // partition is just an empty checkpointed frame (no
-        // schema-uninferable staging dir to special-case)
-        val staged = mutated
-          .join(broadcast(affectedDf), partCols, "left_semi")
-          .localCheckpoint()
-          .select(outCols.map(col): _*)
-        // dynamic overwrite replaces exactly the partitions present in
-        // the staged data; a partition whose rows were ALL deleted is
-        // absent from it, so it is dropped explicitly below
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try staged.write.mode("overwrite").insertInto(table)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        // only a DELETE can leave an affected partition empty (dynamic
-        // overwrite skips absent partitions, so empties need an
-        // explicit drop); an UPDATE rewrites every affected partition
-        // non-empty — skip the extra pass. The collected emptied list
-        // is partition-count-sized (it becomes DROP PARTITION
-        // statements — inherently driver-side DDL).
-        if (ts(i).up == "DELETE") {
-          val emptied = affectedDf
-            .except(staged.select(partCols.map(col): _*).distinct())
-            .collect()
+        // the affected partitions' mutated rows: dynamic overwrite
+        // replaces exactly the partitions present in them
+        stagedRewrite(spark, mutated.join(broadcast(affectedDf), partCols, "left_semi")
+            .select(outCols.map(col): _*)) { staged =>
+          // a partition whose rows a DELETE removed ALL of is absent, so
+          // it is dropped after the overwrite (an UPDATE empties none —
+          // skip the pass). Listed BEFORE the overwrite: that re-caches
+          // the pre-scan against the rewritten table, where the DELETE's
+          // predicate matches nothing, and the planner would then
+          // abandon the stage read mid-flight. The list is
+          // partition-count-sized.
+          val emptied =
+            if (ts(i).up != "DELETE") Array.empty[org.apache.spark.sql.Row]
+            else affectedDf.except(staged.select(partCols.map(col): _*).distinct()).collect()
+          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+          try staged.write.mode("overwrite").insertInto(table)
+          finally prev match {
+            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+          }
           emptied.foreach { r =>
             val spec = partCols.zipWithIndex.map { case (c, k) =>
               s"$c = '${String.valueOf(r.get(k)).replace("'", "''")}'" }.mkString(", ")
@@ -1983,11 +1987,9 @@ object ChDdl {
               val cols = ts.drop(byIdx + 1).filter(_.word).map(_.text)
               snapshot.dropDuplicates(cols)
             }
-          val tmp = java.nio.file.Files.createTempDirectory("graft_optimize").toString
-          deduped.write.mode("overwrite").parquet(tmp)
-          spark.read.schema(snapshot.schema).parquet(tmp)
-            .select(snapshot.schema.fieldNames.toSeq.map(col): _*)
-            .write.mode("overwrite").insertInto(table)
+          stagedRewrite(spark, deduped) {
+            _.write.mode("overwrite").insertInto(table)
+          }
         }
         // a merge is when the reference applies TTL: DELETE-mode rows
         // drop via the ALTER DELETE partition-restricted rewrite (an
@@ -2367,12 +2369,9 @@ object ChDdl {
       .groupBy(t.groupBy.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .select(snapshot.schema.fieldNames.toSeq.map(col): _*)
-    val out = snapshot.filter(!expired).unionByName(rolled)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ttl_rollup").toString
-    out.write.mode("overwrite").parquet(tmp)
-    spark.read.schema(snapshot.schema).parquet(tmp)
-      .select(snapshot.schema.fieldNames.toSeq.map(col): _*)
-      .write.mode("overwrite").insertInto(ct.table)
+    stagedRewrite(spark, snapshot.filter(!expired).unionByName(rolled)) {
+      _.write.mode("overwrite").insertInto(ct.table)
+    }
   }
 
   /** `PROJECTION p (SELECT a, sum(v), count() GROUP BY a)` */

@@ -111,10 +111,7 @@ object ChMatView {
       // no TO: (re)create the implicit `.inner`-style target empty,
       // with the SELECT's output schema
       spark.sql(s"DROP TABLE IF EXISTS $target")
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = new org.apache.hadoop.fs.Path(wh, target.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      ChDdl.clearOrphanLocation(spark, target)
       shape.write.format("parquet").saveAsTable(target)
     }
 

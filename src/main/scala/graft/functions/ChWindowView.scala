@@ -87,15 +87,8 @@ object ChWindowView {
       "WINDOW VIEW SELECT must read FROM a named source")
     val wv = Wv(name, target, selToks(fromIdx + 1).text,
       renderTrim(sel), tsCol.get, delay)
-    // a managed-table location can survive from a previous session
-    // while the in-memory catalog forgot the table — clear the orphan
     // so the first fired batch can saveAsTable
-    if (!spark.catalog.tableExists(target)) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = new org.apache.hadoop.fs.Path(wh, target.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    if (!spark.catalog.tableExists(target)) ChDdl.clearOrphanLocation(spark, target)
     byName.put(name.toLowerCase, wv)
     wv
   }

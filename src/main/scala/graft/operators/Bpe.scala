@@ -93,13 +93,6 @@ object Bpe {
       .toDF("rank", "left", "right", "pair_count").orderBy("rank")
   }
 
-  /** The checkpointed RDD behind a localCheckpoint'd frame, for
-    * explicit storage release (d12's helper, Dedup.scala). */
-  private def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.headOption
-
   private def trainImpl(df: DataFrame, textCol: String,
       merges: Int): Seq[(Int, String, String, Long)] = {
     val spark = df.sparkSession
@@ -147,13 +140,13 @@ object Bpe {
           val next = words
             .select(applyMerge(col("__s"), l, r).as("__s"), col("__c"))
             .localCheckpoint(false)
-          spent = ckptRdd(words)
+          spent = Dedup.ckptRdd(words)
           words = next
         }
       }
     } finally {
       spent.foreach(_.unpersist(blocking = false))
-      ckptRdd(words).foreach(_.unpersist(blocking = false))
+      Dedup.ckptRdd(words).foreach(_.unpersist(blocking = false))
     }
     out.toSeq
   }

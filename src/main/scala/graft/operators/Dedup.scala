@@ -122,6 +122,13 @@ object NearDupIndex {
   */
 object Dedup {
 
+  /** The checkpointed RDD behind a localCheckpoint'd frame, for
+    * explicit storage release (here and in Bpe's merge loop). */
+  private[operators] def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.headOption
+
   /** d01: exact dedup — keep the minimum-id row per content digest.
     * One shuffle on the digest. Preferred realization is an AGGREGATE:
     * min(struct(id, rest…)) — id is unique, so the struct min IS the
@@ -328,10 +335,6 @@ object Dedup {
     // checkpoint, and the changed-count rides the single count() that
     // materializes it — one action + one materialization per round
     // where r10 spent two actions + three persists (verdict item 3).
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.headOption
     // Round 1 computed DIRECTLY from the edge list (guide §2.4): with
     // labels0 = own id and frontier = everyone, the generic round
     // below reduces to label(a) = min(a, min neighbor) — one groupBy

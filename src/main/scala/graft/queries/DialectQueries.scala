@@ -2519,23 +2519,23 @@ object DialectQueries {
           col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"),
           (lit("18446744073709551615").cast("decimal(21,0)")
             - col("o_orderkey")).cast("decimal(20,0)").as("u"))
-      val dir0 = java.nio.file.Files.createTempDirectory("graft_c55")
-      dir0.toFile.deleteOnExit()
-      val path = dir0.resolve("orders.native").toString
-      src.createOrReplaceTempView("graft_c55_src")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM graft_c55_src INTO OUTFILE '$path' FORMAT Native")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM file('$path', 'Native')")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").as("total"),
-          min(col("o_orderdate")).as("dmin"),
-          max(col("o_orderdate")).as("dmax"),
-          sum(length(col("o_orderpriority"))).as("clen"),
-          min(col("u")).cast("string").as("umin"))
-        .orderBy("o_orderstatus")
+      withScratchDir("graft_c55") { dir0 =>
+        val path = dir0.resolve("orders.native").toString
+        src.createOrReplaceTempView("graft_c55_src")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM graft_c55_src INTO OUTFILE '$path' FORMAT Native")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM file('$path', 'Native')")
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("o_totalprice").cast("decimal(18,2)"))
+              .cast("double").as("total"),
+            min(col("o_orderdate")).as("dmin"),
+            max(col("o_orderdate")).as("dmax"),
+            sum(length(col("o_orderpriority"))).as("clen"),
+            min(col("u")).cast("string").as("umin"))
+          .orderBy("o_orderstatus")
+      }
     },
 
     // Protobuf file interchange (ProtobufReader/Writer.cpp wire format,
@@ -2570,39 +2570,39 @@ object DialectQueries {
           (lit("18446744073709551615").cast("decimal(21,0)")
             - col("o_orderkey")).cast("decimal(20,0)").as("u"),
           length(col("o_orderpriority")).as("prio"))
-      val dir0 = java.nio.file.Files.createTempDirectory("graft_c56")
-      dir0.toFile.deleteOnExit()
-      val proto = dir0.resolve("order.proto")
-      java.nio.file.Files.write(proto,
-        """syntax = "proto3";
-          |message Order {
-          |  int64 o_orderkey = 1;
-          |  string o_orderstatus = 2;
-          |  double price = 3;
-          |  bool even = 4;
-          |  sint64 neg = 5;
-          |  uint64 u = 6;
-          |  int32 prio = 7;
-          |}""".stripMargin.getBytes("UTF-8"))
-      val path = dir0.resolve("orders.pb").toString
-      src.createOrReplaceTempView("graft_c56_src")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM graft_c56_src INTO OUTFILE '$path' FORMAT " +
-          s"Protobuf SETTINGS format_schema = '$proto:Order'")
-      s.conf.set("spark.graft.format_schema", s"$proto:Order")
-      try {
+      withScratchDir("graft_c56") { dir0 =>
+        val proto = dir0.resolve("order.proto")
+        java.nio.file.Files.write(proto,
+          """syntax = "proto3";
+            |message Order {
+            |  int64 o_orderkey = 1;
+            |  string o_orderstatus = 2;
+            |  double price = 3;
+            |  bool even = 4;
+            |  sint64 neg = 5;
+            |  uint64 u = 6;
+            |  int32 prio = 7;
+            |}""".stripMargin.getBytes("UTF-8"))
+        val path = dir0.resolve("orders.pb").toString
+        src.createOrReplaceTempView("graft_c56_src")
         graft.functions.ChDdl.execute(s,
-          s"SELECT * FROM file('$path', 'Protobuf')")
-          .groupBy(col("o_orderstatus"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("price").cast("decimal(18,2)"))
-              .cast("double").as("total"),
-            sum(when(col("even"), 1L).otherwise(0L)).as("n_even"),
-            min(col("neg")).as("negmin"),
-            min(col("u")).cast("string").as("umin"),
-            sum(col("prio")).cast("long").as("prio_sum"))
-          .orderBy("o_orderstatus")
-      } finally s.conf.unset("spark.graft.format_schema")
+          s"SELECT * FROM graft_c56_src INTO OUTFILE '$path' FORMAT " +
+            s"Protobuf SETTINGS format_schema = '$proto:Order'")
+        s.conf.set("spark.graft.format_schema", s"$proto:Order")
+        try {
+          graft.functions.ChDdl.execute(s,
+            s"SELECT * FROM file('$path', 'Protobuf')")
+            .groupBy(col("o_orderstatus"))
+            .agg(count(lit(1)).as("n"),
+              sum(col("price").cast("decimal(18,2)"))
+                .cast("double").as("total"),
+              sum(when(col("even"), 1L).otherwise(0L)).as("n_even"),
+              min(col("neg")).as("negmin"),
+              min(col("u")).cast("string").as("umin"),
+              sum(col("prio")).cast("long").as("prio_sum"))
+            .orderBy("o_orderstatus")
+        } finally s.conf.unset("spark.graft.format_schema")
+      }
     },
 
     // MsgPack file interchange (registerFormats.cpp:41-42, the public
@@ -2634,24 +2634,24 @@ object DialectQueries {
           col("o_totalprice").cast("double").as("price"),
           (lit("18446744073709551615").cast("decimal(21,0)")
             - col("o_orderkey")).cast("decimal(20,0)").as("u"))
-      val dir0 = java.nio.file.Files.createTempDirectory("graft_c57")
-      dir0.toFile.deleteOnExit()
-      val path = dir0.resolve("orders.msgpack").toString
-      src.createOrReplaceTempView("graft_c57_src")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM graft_c57_src INTO OUTFILE '$path' FORMAT MsgPack")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM file('$path', 'MsgPack', 'o_orderkey Int64, " +
-          "o_orderstatus String, prio Nullable(String), " +
-          "price Float64, u UInt64')")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("prio").isNull, 1L).otherwise(0L)).as("n_null"),
-          sum(coalesce(length(col("prio")), lit(0))).cast("long").as("plen"),
-          sum(col("price").cast("decimal(18,2)"))
-            .cast("double").as("total"),
-          min(col("u")).cast("string").as("umin"))
-        .orderBy("o_orderstatus")
+      withScratchDir("graft_c57") { dir0 =>
+        val path = dir0.resolve("orders.msgpack").toString
+        src.createOrReplaceTempView("graft_c57_src")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM graft_c57_src INTO OUTFILE '$path' FORMAT MsgPack")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM file('$path', 'MsgPack', 'o_orderkey Int64, " +
+            "o_orderstatus String, prio Nullable(String), " +
+            "price Float64, u UInt64')")
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("prio").isNull, 1L).otherwise(0L)).as("n_null"),
+            sum(coalesce(length(col("prio")), lit(0))).cast("long").as("plen"),
+            sum(col("price").cast("decimal(18,2)"))
+              .cast("double").as("total"),
+            min(col("u")).cast("string").as("umin"))
+          .orderBy("o_orderstatus")
+      }
     },
 
     // ZSTD compressed frames (CompressionCodecZSTD.cpp, method byte
@@ -2675,28 +2675,28 @@ object DialectQueries {
         .filter(col("o_orderkey") % 50 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
-      val dir0 = java.nio.file.Files.createTempDirectory("graft_c58")
-      dir0.toFile.deleteOnExit()
-      val path = dir0.resolve("orders.native").toString
-      src.createOrReplaceTempView("graft_c58_src")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM graft_c58_src INTO OUTFILE '$path' " +
-          "COMPRESSION 'zstd' FORMAT Native")
-      val in = java.nio.file.Files.newInputStream(
-        java.nio.file.Paths.get(path))
-      val mb = try { in.skip(16); in.read() } finally in.close()
-      require(mb == 0x90,
-        f"c58: expected ZSTD frames (method 0x90) on disk, found 0x$mb%02x")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM file('$path', 'Native')")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").as("total"),
-          min(col("o_orderdate")).as("dmin"),
-          max(col("o_orderdate")).as("dmax"),
-          sum(length(col("o_orderpriority"))).as("clen"))
-        .orderBy("o_orderstatus")
+      withScratchDir("graft_c58") { dir0 =>
+        val path = dir0.resolve("orders.native").toString
+        src.createOrReplaceTempView("graft_c58_src")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM graft_c58_src INTO OUTFILE '$path' " +
+            "COMPRESSION 'zstd' FORMAT Native")
+        val in = java.nio.file.Files.newInputStream(
+          java.nio.file.Paths.get(path))
+        val mb = try { in.skip(16); in.read() } finally in.close()
+        require(mb == 0x90,
+          f"c58: expected ZSTD frames (method 0x90) on disk, found 0x$mb%02x")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM file('$path', 'Native')")
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("o_totalprice").cast("decimal(18,2)"))
+              .cast("double").as("total"),
+            min(col("o_orderdate")).as("dmin"),
+            max(col("o_orderdate")).as("dmax"),
+            sum(length(col("o_orderpriority"))).as("clen"))
+          .orderBy("o_orderstatus")
+      }
     },
 
     // CODEC chains as frame methods (CompressionCodecMultiple.cpp
@@ -2719,28 +2719,28 @@ object DialectQueries {
         .filter(col("l_orderkey") % 64 === 0)
         .select(col("l_orderkey"), col("l_linestatus"),
           col("l_quantity"), col("l_shipdate"))
-      val dir0 = java.nio.file.Files.createTempDirectory("graft_c59")
-      dir0.toFile.deleteOnExit()
-      val path = dir0.resolve("lineitem.native").toString
-      src.createOrReplaceTempView("graft_c59_src")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM graft_c59_src INTO OUTFILE '$path' " +
-          "COMPRESSION 'delta(8), zstd' FORMAT Native")
-      val in = java.nio.file.Files.newInputStream(
-        java.nio.file.Paths.get(path))
-      val mb = try { in.skip(16); in.read() } finally in.close()
-      require(mb == 0x91,
-        f"c59: expected a CODEC chain (Multiple, 0x91) on disk, found 0x$mb%02x")
-      graft.functions.ChDdl.execute(s,
-        s"SELECT * FROM file('$path', 'Native')")
-        .groupBy(col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_orderkey")).cast("long").as("ksum"),
-          sum(col("l_quantity").cast("decimal(18,2)"))
-            .cast("double").as("qsum"),
-          min(col("l_shipdate")).as("dmin"),
-          max(col("l_shipdate")).as("dmax"))
-        .orderBy("l_linestatus")
+      withScratchDir("graft_c59") { dir0 =>
+        val path = dir0.resolve("lineitem.native").toString
+        src.createOrReplaceTempView("graft_c59_src")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM graft_c59_src INTO OUTFILE '$path' " +
+            "COMPRESSION 'delta(8), zstd' FORMAT Native")
+        val in = java.nio.file.Files.newInputStream(
+          java.nio.file.Paths.get(path))
+        val mb = try { in.skip(16); in.read() } finally in.close()
+        require(mb == 0x91,
+          f"c59: expected a CODEC chain (Multiple, 0x91) on disk, found 0x$mb%02x")
+        graft.functions.ChDdl.execute(s,
+          s"SELECT * FROM file('$path', 'Native')")
+          .groupBy(col("l_linestatus"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("l_orderkey")).cast("long").as("ksum"),
+            sum(col("l_quantity").cast("decimal(18,2)"))
+              .cast("double").as("qsum"),
+            min(col("l_shipdate")).as("dmin"),
+            max(col("l_shipdate")).as("dmax"))
+          .orderBy("l_linestatus")
+      }
     }
   )
 }

@@ -249,22 +249,22 @@ object TypeQueries {
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("double").as("price"))
         .orderBy("o_orderstatus", "o_orderkey")
-      val dir0 = java.nio.file.Files.createTempDirectory("graft_p12")
-      dir0.toFile.deleteOnExit()
-      val path = dir0.resolve("orders.native").toString
-      graft.sources.NativeFormat.write(src, path, None, blockRows = 64)
-      val (got, stats) = graft.sources.NativeFormat.readIndexed(s, path,
-        Seq("o_orderkey", "o_orderstatus", "price"),
-        predicate = Some(("o_orderstatus", _ == "F")))
-      require(stats.blocksDecoded < stats.blocksTotal,
-        s"index skipped nothing: $stats")
-      got.filter(col("o_orderstatus") === "F")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("price").cast("decimal(18,2)")).cast("double").as("total"),
-          min(col("o_orderkey")).as("kmin"),
-          max(col("o_orderkey")).as("kmax"))
-        .orderBy("o_orderstatus")
+      withScratchDir("graft_p12") { dir0 =>
+        val path = dir0.resolve("orders.native").toString
+        graft.sources.NativeFormat.write(src, path, None, blockRows = 64)
+        val (got, stats) = graft.sources.NativeFormat.readIndexed(s, path,
+          Seq("o_orderkey", "o_orderstatus", "price"),
+          predicate = Some(("o_orderstatus", _ == "F")))
+        require(stats.blocksDecoded < stats.blocksTotal,
+          s"index skipped nothing: $stats")
+        got.filter(col("o_orderstatus") === "F")
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("price").cast("decimal(18,2)")).cast("double").as("total"),
+            min(col("o_orderkey")).as("kmin"),
+            max(col("o_orderkey")).as("kmax"))
+          .orderBy("o_orderstatus")
+      }
     },
 
     // ALIAS columns (ParserCreateQuery.h:128 default_specifier ALIAS,

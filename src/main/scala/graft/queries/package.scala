@@ -39,6 +39,16 @@ package object queries {
     def dynamic(sqlFn: QSqlFn)(fn: QFn): Q = Q(fn, None, Some(sqlFn))
   }
 
+  /** Run `f` in a fresh temp directory named after `prefix`, then
+    * delete the directory and its files (`.idx` and `.proto` included).
+    * The keys that use it adopt their file through a reader that builds
+    * the frame on the driver, so the frame `f` returns no longer reads
+    * the directory. */
+  def withScratchDir[T](prefix: String)(f: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   /** Scale-adaptive fan-out for compute-heavy map work (guide §2.5
     * "input skew: one huge unsplittable file … repartition immediately
     * after the read"): the local testdata tables are single-row-group

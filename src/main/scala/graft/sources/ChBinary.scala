@@ -120,14 +120,18 @@ object ChBinary {
     v
   }
 
-  def readString(in: DataInputStream, fmt: String): String = {
-    val n = readVarint(in, fmt)
+  def readString(in: DataInputStream, fmt: String): String =
+    new String(readBytes(in, readVarint(in, fmt), fmt), UTF_8)
+
+  /** A string's `n` bytes, `n` as the file states it (MsgPack's str and
+    * bin too): a negative `n`, or one past the end of the file, refuses. */
+  def readBytes(in: DataInputStream, n: Long, fmt: String): Array[Byte] = {
     require(n >= 0, s"$fmt: negative string length $n")
     // readNBytes grows its buffer with the bytes actually present, so
     // a length past the end of the file costs no allocation
     val b = in.readNBytes(math.min(n, Int.MaxValue.toLong).toInt)
     require(b.length == n, s"$fmt: string length $n overruns the file")
-    new String(b, UTF_8)
+    b
   }
 
   /** True at the end of the stream, consuming nothing otherwise. */

@@ -198,12 +198,10 @@ object MsgPackFormat {
       case 0xd3 => beRead(in, 8)
       case 0xca => java.lang.Float.intBitsToFloat(beRead(in, 4).toInt)
       case 0xcb => java.lang.Double.longBitsToDouble(beRead(in, 8))
+      // unsigned big-endian lengths, refused past the end of the file
       case 0xd9 | 0xda | 0xdb =>
-        val n = beRead(in, 1 << (t - 0xd9)).toInt
-        val b = new Array[Byte](n); in.readFully(b); new String(b, UTF_8)
-      case 0xc4 | 0xc5 | 0xc6 =>
-        val n = beRead(in, 1 << (t - 0xc4)).toInt
-        val b = new Array[Byte](n); in.readFully(b); b
+        new String(ChBinary.readBytes(in, beRead(in, 1 << (t - 0xd9)), "MsgPack"), UTF_8)
+      case 0xc4 | 0xc5 | 0xc6 => ChBinary.readBytes(in, beRead(in, 1 << (t - 0xc4)), "MsgPack")
       case 0xdc => Vector.fill(beRead(in, 2).toInt)(readValue(in))
       case 0xdd => Vector.fill(beRead(in, 4).toInt)(readValue(in))
       case other => throw new IllegalArgumentException(

@@ -240,6 +240,83 @@ class DdlSpec extends SparkSpec {
     assert(spark.table("graft_mut_fail").count() == 20)
   }
 
+  test("every table rewrite leaves no stage and no temp directory behind") {
+    GraftFunctions.ensureRegistered(spark)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val prefixes = Seq("graft_altercol", "graft_optimize", "graft_ttl_rollup")
+    def tmpDirs = Option(tmp.list()).toSeq.flatten
+      .filter(n => prefixes.exists(n.startsWith)).toSet
+    val before = tmpDirs
+    def rows(t: String) = spark.table(t).orderBy("k").collect().map(_.toSeq).toSeq
+    // ALTER … ADD/DROP/RENAME/MODIFY COLUMN
+    ChDdl.execute(spark,
+      """CREATE TABLE graft_stage_col (k Int64, a Int32)
+        |ENGINE = MergeTree() ORDER BY (k);
+        |INSERT INTO graft_stage_col VALUES (1, 7), (2, 9);
+        |ALTER TABLE graft_stage_col ADD COLUMN b Int64 DEFAULT a * 2;
+        |ALTER TABLE graft_stage_col RENAME COLUMN a TO a2;
+        |ALTER TABLE graft_stage_col MODIFY COLUMN a2 Int64;
+        |ALTER TABLE graft_stage_col DROP COLUMN b""".stripMargin)
+    assert(rows("graft_stage_col") == Seq(Seq(1L, 7L), Seq(2L, 9L)))
+    // OPTIMIZE … DEDUPLICATE, and the TTL GROUP BY rollup it applies
+    ChDdl.execute(spark,
+      """CREATE TABLE graft_stage_opt (k Int64, d Date, v Float64)
+        |ENGINE = MergeTree() ORDER BY (k, d)
+        |TTL d + INTERVAL 30 DAY GROUP BY k SET v = sum(v);
+        |INSERT INTO graft_stage_opt VALUES
+        |  (1, '2000-01-01', 1.5), (1, '2000-02-01', 2.5),
+        |  (1, '2000-02-01', 2.5), (2, '2100-01-01', 7.0);
+        |OPTIMIZE TABLE graft_stage_opt FINAL DEDUPLICATE""".stripMargin)
+    assert(spark.table("graft_stage_opt").orderBy("k").select("k", "v")
+      .as[(Long, Double)].collect().toSeq == Seq((1L, 4.0), (2L, 7.0)))
+    // ALTER UPDATE/DELETE, unpartitioned and partitioned (the DELETE
+    // empties partition g0, which is dropped, and thins g1)
+    ChDdl.execute(spark,
+      """CREATE TABLE graft_stage_mut (k Int64, v Int64)
+        |ENGINE = MergeTree() ORDER BY (k);
+        |INSERT INTO graft_stage_mut VALUES (1, 10), (2, 20), (3, 30);
+        |ALTER TABLE graft_stage_mut UPDATE v = v + 1 WHERE k = 2;
+        |ALTER TABLE graft_stage_mut DELETE WHERE k = 3;
+        |CREATE TABLE graft_stage_pmut (k Int64, grp String, v Int64)
+        |ENGINE = MergeTree() PARTITION BY grp ORDER BY (k);
+        |INSERT INTO graft_stage_pmut VALUES (1, 'g0', 10), (2, 'g1', 20), (3, 'g1', 30);
+        |ALTER TABLE graft_stage_pmut UPDATE v = v + 1 WHERE k = 3;
+        |ALTER TABLE graft_stage_pmut DELETE WHERE grp = 'g0' OR k = 2""".stripMargin)
+    assert(rows("graft_stage_mut") == Seq(Seq(1L, 10L), Seq(2L, 21L)))
+    assert(spark.table("graft_stage_pmut").orderBy("k").select("k", "v")
+      .as[(Long, Long)].collect().toSeq == Seq((3L, 31L)))
+    assert(spark.sql("SHOW PARTITIONS graft_stage_pmut").as[String].collect()
+      .toSeq == Seq("grp=g1"))
+    assert(stageEntries.isEmpty, s"stages left behind: $stageEntries")
+    assert(tmpDirs -- before == Set.empty, s"temp directories left: ${tmpDirs -- before}")
+    Seq("graft_stage_col", "graft_stage_opt", "graft_stage_mut", "graft_stage_pmut")
+      .foreach(t => ChDdl.execute(spark, s"DROP TABLE $t"))
+  }
+
+  test("a rewrite whose write fails keeps its stage, names it, and the stage holds every row") {
+    val rows = spark.range(0, 100).select($"id".as("k"), ($"id" % 7).as("v"))
+    val e = intercept[IllegalStateException] {
+      ChDdl.stagedRewrite(spark, rows) { staged =>
+        assert(staged.count() == 100)
+        throw new IllegalStateException("overwrite boom")
+      }
+    }
+    assert(e.getMessage == "overwrite boom", e.getMessage)
+    val kept = stageEntries
+    assert(kept.length == 1, s"expected the one kept stage: $kept")
+    val named = e.getSuppressed.map(_.getMessage)
+    assert(named.exists(_.contains(kept.head)), named.mkString("; "))
+    val stage = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), s"__graft_stage__/${kept.head}")
+    try {
+      val back = spark.read.schema(rows.schema).parquet(stage.toString)
+      assert(back.orderBy("k").as[(Long, Long)].collect().toSeq ==
+        rows.as[(Long, Long)].collect().toSeq)
+    } finally stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(stage, true)
+    assert(stageEntries.isEmpty)
+  }
+
   test("ALTER UPDATE evaluates every SET and the predicate against the original row") {
     GraftFunctions.ensureRegistered(spark)
     val ct = ChDdl.parse(

@@ -111,6 +111,27 @@ class MsgPackSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(bad), "partial file survived")
   }
 
+  test("hostile str/bin lengths refuse with an IllegalArgumentException naming MsgPack") {
+    GraftFunctions.ensureRegistered(spark)
+    // hand-built files: str32 claiming 0xffffffff and 0x7fffffff bytes,
+    // str8 claiming 5 with 2 present, bin32 claiming 0xffffffff, bin16
+    // claiming 256 with 1 present
+    val cases = Seq(
+      "str32 -1" -> Seq(0xdb, 0xff, 0xff, 0xff, 0xff, 0x61, 0x62),
+      "str32 2^31-1" -> Seq(0xdb, 0x7f, 0xff, 0xff, 0xff, 0x61, 0x62),
+      "str8 short" -> Seq(0xd9, 0x05, 0x61, 0x62),
+      "bin32 -1" -> Seq(0xc6, 0xff, 0xff, 0xff, 0xff),
+      "bin16 short" -> Seq(0xc5, 0x01, 0x00, 0x00))
+    cases.zipWithIndex.foreach { case ((label, bytes), k) =>
+      val f = dir.resolve(s"hostile$k.msgpack")
+      java.nio.file.Files.write(f, bytes.map(_.toByte).toArray)
+      val e = intercept[IllegalArgumentException] {
+        ChDdl.execute(spark, s"SELECT * FROM file('$f', 'MsgPack', 's String')")
+      }
+      assert(e.getMessage.contains("MsgPack"), s"$label: ${e.getMessage}")
+    }
+  }
+
   test("positional format: adoption without structure refuses with the signature") {
     GraftFunctions.ensureRegistered(spark)
     val out = dir.resolve("ns.msgpack").toString
