@@ -1,7 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
+  /** The I/O canary's parquet lives in a scratch directory that is
+    * deleted when the bench ends, whether it succeeds or fails. */
+  def main(args: Array[String]): Unit =
+    graft.queries.withScratchDir("graft_canary_io")(run)
+
+  private def run(canaryDir: java.nio.file.Path): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 4 interleaved passes: with ≥4 samples the spread below trims the
@@ -79,9 +84,7 @@ object Bench {
     // isolated re-runs. Emitted as canary_io_s; gating still uses
     // canary_s (one change at a time — r17).
     val canaryIoPath = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_canary_io")
-      dir.toFile.deleteOnExit()
-      val p = dir.resolve("fixed.parquet").toString
+      val p = canaryDir.resolve("fixed.parquet").toString
       spark.range(0L, 4000000L, 1L, cpus.toInt)
         .selectExpr("id", "id % 9973 AS k",
           "concat(lpad(conv(id, 10, 16), 24, 'x'), " +

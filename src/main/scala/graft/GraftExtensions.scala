@@ -23,5 +23,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(session => graft.plans.ProjectionRewrite(session))
     // transform(arr, x -> casts(x)) → array-level Cast (codegen'd)
     ext.injectOptimizerRule(session => graft.plans.CastTransformRewrite(session))
+    // long-backed decimal SUM → DecSumExact; pre-CBO, so it runs after
+    // ProjectionRewrite has matched Sum
+    ext.injectPreCBORule(_ => graft.plans.DecSumRewrite)
   }
 }

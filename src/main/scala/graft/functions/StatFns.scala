@@ -572,41 +572,18 @@ private[graft] object StatFns {
       Seq(arr, accOf(lit(Double.NegativeInfinity), lit(0.0)), merge)), "tot")
   }
 
-  /** exponentialTimeDecayed{Sum,Max,Count,Avg}: each event decays by
-    * exp(−Δt/x) to the group's LATEST time. One time-sorted fold with
-    * running renormalization (acc·exp((t_prev−t_cur)/x) at each step)
-    * — numerically stable where the closed form exp(t/x) overflows
-    * for epoch-scale t. Merged arg orders from the parametric
-    * rewrite: Sum/Max (v, t, x); Count (t, x). */
+  /** exponentialTimeDecayed{Sum,Max,Count,Avg}: one field of the
+    * mergeable [[TimeDecayed]] aggregate. Merged arg orders from the
+    * parametric rewrite: Sum/Max/Avg (v, t, x); Count (t, x). */
   private def timeDecayed(kind: String)(es: Seq[Expression]): Expression = {
-    val (v, t, x) =
-      if (kind == "count") (Literal(1.0): Expression, d(es(0)), d(es(1)))
-      else (d(es(0)), d(es(1)), d(es(2)))
-    val entry = CreateNamedStruct(Seq(Literal("t"), t, Literal("v"), v))
-    val arr = builtin("sort_array")(
-      Seq(wrapAgg(builtin("collect_list")(Seq(entry)))))
-    def accOf(lt: Expression, s: Expression, c: Expression,
-        m: Expression): Expression =
-      CreateNamedStruct(Seq(Literal("lt"), lt, Literal("s"), s,
-        Literal("c"), c, Literal("m"), m))
-    val a = fresh("acc"); val e = fresh("e")
-    val et = fld(e, "t"); val ev = fld(e, "v")
-    val dec = exp((fld(a, "lt") - et) / x)
-    val stepped = accOf(et,
-      fld(a, "s") * dec + ev,
-      fld(a, "c") * dec + lit(1.0),
-      Greatest(Seq(fld(a, "m") * dec, ev)))
-    val merge = LambdaFunction(
-      If(IsNull(fld(a, "lt")), accOf(et, ev, lit(1.0), ev), stepped),
-      Seq(a, e))
-    val folded = builtin("aggregate")(Seq(arr,
-      accOf(Literal(null, DoubleType), lit(0.0), lit(0.0), lit(0.0)), merge))
+    val agg =
+      if (kind == "count") TimeDecayed(Literal(1.0), es(0), es(1)).toAggregateExpression()
+      else TimeDecayed(es(0), es(1), es(2)).toAggregateExpression()
     kind match {
-      case "sum"   => fld(folded, "s")
-      case "count" => fld(folded, "c")
-      case "max"   => fld(folded, "m")
-      // avg splices the fold twice — bind it once (r13)
-      case "avg"   => bind(folded)(f => fld(f, "s") / fld(f, "c"))
+      case "sum"   => fld(agg, "s")
+      case "count" => fld(agg, "c")
+      case "max"   => fld(agg, "m")
+      case "avg"   => fld(agg, "s") / fld(agg, "c")
     }
   }
 
@@ -1513,7 +1490,7 @@ private[graft] object StatFns {
     "exponentialTimeDecayedCount" -> { es => timeDecayed("count")(es) },
     "exponentialTimeDecayedAvg"   -> { es => timeDecayed("avg")(es) },
     "exponentialMovingAverage" -> { es =>
-      // 2^(−Δt/hl) = e^(−Δt/(hl/ln2)): reuse the decayed-avg fold
+      // 2^(−Δt/hl) = e^(−Δt/(hl/ln2)): reuse the decayed avg
       val hl = Divide(Cast(es(2), DoubleType), Literal(math.log(2.0)))
       timeDecayed("avg")(Seq(es(0), es(1), hl)) },
 

@@ -232,7 +232,7 @@ object AggQueries {
           map(col("o_orderpriority"), col("o_totalprice")).as("m"))
         .select(col("o_orderstatus"), explode(col("m")).as(Seq("k", "v")))
       val perKey = entries.groupBy("o_orderstatus", "k")
-        .agg(decSum(dec(col("v"))).as("s"))
+        .agg(sum(dec(col("v"))).as("s"))
       perKey.groupBy("o_orderstatus")
         .agg(sort_array(collect_list(struct(col("k"), col("s")))).as("kv"))
         .select(col("o_orderstatus"),

@@ -31,9 +31,9 @@ object CoreQueries {
         .agg(
           moneySum(col("l_quantity")).as("sum_qty"),
           moneySum(col("l_extendedprice")).as("sum_base_price"),
-          decSum(dec(col("l_extendedprice")) * (lit(1) - rate(col("l_discount"))))
+          sum(dec(col("l_extendedprice")) * (lit(1) - rate(col("l_discount"))))
             .cast("double").as("sum_disc_price"),
-          (decSum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
+          (sum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     },
@@ -135,7 +135,7 @@ object CoreQueries {
         .agg(moneySum(col("o_totalprice")).as("revenue"))
         .persist()
       val avgRev = rev.agg(
-        (decSum(dec(col("revenue"))).cast("double") / count(lit(1))).as("avg_rev"))
+        (sum(dec(col("revenue"))).cast("double") / count(lit(1))).as("avg_rev"))
       rev.join(broadcast(avgRev)).filter(col("revenue") > col("avg_rev"))
         .select("o_custkey", "revenue").orderBy("o_custkey")
     },
@@ -290,7 +290,7 @@ object CoreQueries {
         .agg(
           count(lit(1)).as("n_rows"),
           count(col("v")).as("n_nonnull"),
-          decSum(dec(col("v"))).cast("double").as("sum_v"),
+          sum(dec(col("v"))).cast("double").as("sum_v"),
           count(when(col("v").isNull, 1)).as("n_null"),
           count(when(col("v") <=> lit(null), 1)).as("n_nullsafe"))
         .orderBy("o_orderstatus")

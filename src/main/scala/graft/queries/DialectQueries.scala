@@ -783,10 +783,11 @@ object DialectQueries {
           |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
     // exponentialTimeDecayed{Sum,Count,Avg,Max} — each event decayed
-    // by exp(−Δt/x) to the group's latest time. The fold renormalizes
-    // running sums step-by-step (stable at epoch scale); the oracle
-    // spells the mathematically-equal closed form Σ v·exp((t−tmax)/x);
-    // round(6) absorbs the last-ulp addition-order difference.
+    // by exp(−Δt/x) to the group's latest time. The aggregate keeps
+    // its sums normalized to its latest time (stable at epoch scale);
+    // the oracle spells the mathematically-equal closed form
+    // Σ v·exp((t−tmax)/x); round(6) absorbs the last-ulp
+    // addition-order difference.
     "c35_ch_time_decay" -> Q(
       """WITH e AS (
         |  SELECT event_type, CAST(value AS DOUBLE) AS v,

@@ -279,7 +279,7 @@ object JoinQueries {
       val perOrder = t.lineitem
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("__n"),
-          decSum(dec(col("l_extendedprice")) * (lit(1) - rate(col("l_discount"))))
+          sum(dec(col("l_extendedprice")) * (lit(1) - rate(col("l_discount"))))
             .as("__rev"))
       perOrder
         .join(t.orders.select("o_orderkey", "o_custkey"),

@@ -28,7 +28,7 @@ object TypeQueries {
       def r(c: String) = col(c).cast("decimal(4,2)")
       Tables(s, dir).lineitem.groupBy("l_returnflag")
         .agg(
-          decSum(p("l_extendedprice") * r("l_discount")).cast("double").as("disc_amount"),
+          sum(p("l_extendedprice") * r("l_discount")).cast("double").as("disc_amount"),
           sum(p("l_extendedprice") * (lit(1) - r("l_discount"))
             * (lit(1) + r("l_tax"))).cast("double").as("charged"),
           min(p("l_extendedprice")).cast("double").as("min_price"),
@@ -444,7 +444,7 @@ object TypeQueries {
       s.table("graft_p04")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
-          decSum(dec(col("o_totalprice"))).cast("double").as("total"))
+          sum(dec(col("o_totalprice"))).cast("double").as("total"))
         .orderBy("o_orderstatus")
     },
 

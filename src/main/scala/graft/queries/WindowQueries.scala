@@ -168,7 +168,7 @@ object WindowQueries {
       Tables(s, dir).events
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          decSum(dec(col("value"))).cast("double").as("total_value"))
+          sum(dec(col("value"))).cast("double").as("total_value"))
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"), col("total_value"))
         .orderBy("win_start", "event_type")

@@ -74,17 +74,10 @@ package object queries {
   def dec(c: Column): Column = c.cast("decimal(12,2)")
   /** Exact rate arithmetic (discount/tax < 10): double → decimal(4,2). */
   def rate(c: Column): Column = c.cast("decimal(4,2)")
-  /** Exact decimal SUM through the two-tier accumulator
-    * (functions/DecSumExact — long unscaled units with a decimal
-    * escape): bit-identical to sum(c) at any partitioning, without
-    * Spark Sum's boxed BigDecimal add per row (its buffer for any
-    * input wider than decimal(8,s) is precision p+10 > 18). Input
-    * must be long-backed (precision ≤ 18) — every dec()/rate()
-    * column and product up to (18,s) qualifies; wider products (the
-    * y01 `charged` triple product at (22,6)) stay on Sum. */
-  def decSum(c: Column): Column = call_function("decimal_sum_exact", c)
-  /** Partial-agg-friendly exact sum of a money column, back to double. */
-  def moneySum(c: Column): Column = decSum(dec(c)).cast("double")
+  /** Partial-agg-friendly exact sum of a money column, back to double.
+    * The decimal(12,2) sum runs on DecSumExact's long accumulator
+    * (plans/DecSumRewrite), as every long-backed decimal sum does. */
+  def moneySum(c: Column): Column = sum(dec(c)).cast("double")
   /** Deterministic average: exact decimal sum, then one IEEE division. */
-  def moneyAvg(c: Column): Column = decSum(dec(c)).cast("double") / count(c)
+  def moneyAvg(c: Column): Column = sum(dec(c)).cast("double") / count(c)
 }

@@ -23,6 +23,18 @@ class PlanAuditSpec extends SparkSpec {
   private def planOf(name: String): SparkPlan =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
 
+  /** Every registered key built and planned once, each right after it
+    * is built (a later key may replace a table an earlier one read);
+    * the whole-registry audits below share it. */
+  private lazy val built: Seq[(String, org.apache.spark.sql.execution.QueryExecution)] =
+    withoutAqe {
+      SparkEntry.queries.toSeq.map { case (name, fn) =>
+        val qe = fn(spark, sfDir).queryExecution
+        qe.executedPlan
+        name -> qe
+      }
+    }
+
   /** Low-cardinality dimension/enum columns — a window partitioned
     * ONLY on these puts an entire stratum on one task at 100 TB, which
     * the partitionSpec-empty rule cannot see (r4 verdict: t05).
@@ -117,8 +129,8 @@ class PlanAuditSpec extends SparkSpec {
       "t22_bigram_logppl",  // broadcast 1-row |V| scalar (t14 shape)
       "c54_ch_bitmap_geo")  // broadcast 1-row reference bitmap
     withoutAqe {
-      val violations = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
+      val violations = built.flatMap { case (name, qe) =>
+        val plan = qe.executedPlan
         plan.collect {
           case w: WindowExec if w.partitionSpec.isEmpty =>
             s"$name: unpartitioned WindowExec"
@@ -135,6 +147,28 @@ class PlanAuditSpec extends SparkSpec {
       }
       assert(violations.isEmpty, violations.distinct.mkString("; "))
     }
+  }
+
+  test("no registered key's optimized plan keeps a Sum over a decimal of precision 9-18") {
+    import org.apache.spark.sql.catalyst.expressions.EvalMode
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.types.DecimalType
+    // DecSumRewrite's contract: every grouped long-backed decimal sum
+    // (outside TRY mode) runs on DecSumExact, whichever way the key
+    // spells it
+    val kept = built.flatMap { case (name, qe) =>
+      qe.optimizedPlan.collectWithSubqueries {
+        case a: Aggregate => a.aggregateExpressions.flatMap(_.collect {
+          case AggregateExpression(s: Sum, _, _, _, _) if (s.child.dataType match {
+              case d: DecimalType => d.precision > 8 && d.precision <= 18
+              case _ => false
+            }) && s.evalContext.evalMode != EvalMode.TRY =>
+            s"$name: ${s.sql}"
+        })
+      }.flatten
+    }
+    assert(kept.isEmpty, kept.mkString("; "))
   }
 
   test("stratum-sort rule catches the pre-fix mixSample shape and passes the two-phase one") {

@@ -88,6 +88,28 @@ class ProjectionSpec extends SparkSpec {
     }
   }
 
+  test("a decimal(12,2) SUM still reads its projection (DecSumRewrite runs after it)") {
+    GraftFunctions.ensureRegistered(spark)
+    val dct = ChDdl.parse(
+      """CREATE TABLE proj_dec_t (k Int64, s String, price Decimal(12, 2),
+        |  PROJECTION by_s (SELECT s, sum(price), count() GROUP BY s)
+        |) ENGINE = MergeTree() ORDER BY (k)""".stripMargin)
+    dct.create(spark)
+    dct.insertSelect(spark, spark.range(1, 1001).select($"id".as("k"),
+      concat(lit("s"), $"id" % 3).as("s"),
+      (($"id" * 7919) % 100000 / 100.0).cast("decimal(12,2)").as("price")))
+    val q = spark.table("proj_dec_t").groupBy("s").agg(sum($"price").as("total"))
+    val plan = q.queryExecution.optimizedPlan
+    assert(plan.toString.contains("__proj_by_s"), s"decimal sum not routed:\n$plan")
+    val got = q.orderBy("s").collect().toSeq
+    val expect = spark.range(1, 1001).select(concat(lit("s"), $"id" % 3).as("s"),
+      (($"id" * 7919) % 100000 / 100.0).cast("decimal(12,2)").as("price"))
+      .groupBy("s").agg(sum($"price").as("total")).orderBy("s").collect().toSeq
+    assert(got == expect && got.size == 3, s"$got vs $expect")
+    spark.sql("DROP TABLE proj_dec_t")
+    spark.sql("DROP TABLE IF EXISTS proj_dec_t__proj_by_s")
+  }
+
   test("subset grouping keys re-aggregate the rollup correctly") {
     val q = spark.table("graft_proj_spec")
       .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
