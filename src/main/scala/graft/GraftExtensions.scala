@@ -14,6 +14,11 @@ import graft.functions.GraftFunctions
   * Spark's builder, except the few whose dialect semantics differ
   * (`median`, the bounded reservoir), which are replaced from the
   * session's first statement.
+  *
+  * Plan rules: `ProjectionRewrite` and `CastTransformRewrite`
+  * (optimizer), `DecSumRewrite` (pre-CBO) and `SortOnOnePartition`,
+  * an AQE runtime rule that sorts a total order over at most one
+  * minimum partition in that partition, without a range exchange.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,5 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // long-backed decimal SUM → DecSumExact; pre-CBO, so it runs after
     // ProjectionRewrite has matched Sum
     ext.injectPreCBORule(_ => graft.plans.DecSumRewrite)
+    // AQE runtime rule: a total order over at most one minimum
+    // partition of materialized input sorts in that partition, with no
+    // range exchange and no sampling job
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SortOnOnePartition)
   }
 }

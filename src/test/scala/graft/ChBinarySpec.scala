@@ -11,7 +11,7 @@ import graft.sources.{NativeFormat, NativeIndex, RowBinary}
   * hand-built bytes. */
 class ChBinarySpec extends SparkSpec {
 
-  private lazy val dir = java.nio.file.Files.createTempDirectory("graft_chbin")
+  private lazy val dir = scratchDir("graft_chbin")
 
   private def file(name: String, hex: String): String = {
     val clean = hex.filterNot(_.isWhitespace)

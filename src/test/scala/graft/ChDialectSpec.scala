@@ -624,7 +624,7 @@ class ChDialectSpec extends SparkSpec {
     // plus a copy of sf0.001 events with NULL value and NULL user_id
     // rows added: both plans must skip them, keeping parity
     import org.apache.spark.sql.functions.{col, lit, when}
-    val withNulls = java.nio.file.Files.createTempDirectory("c30_nulls").toString
+    val withNulls = scratchDir("c30_nulls").toString
     val ev = graft.sources.Tables(spark, sfDir).events
     val extra = ev.limit(60).withColumn("value",
         when(col("event_id") % 3 === 0, lit(null)).otherwise(col("value")))

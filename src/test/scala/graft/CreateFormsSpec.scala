@@ -141,7 +141,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("file() table function reads parquet/CSV/JSONEachRow through the front door") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_filefn")
+    val dir = scratchDir("graft_filefn")
     val pq = dir.resolve("t.parquet").toString
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.mode("overwrite").parquet(pq)
     val got = ChDdl.execute(spark,
@@ -170,7 +170,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("s3()/hdfs()/url() are real table functions riding the file() adoption path") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_remotefn")
+    val dir = scratchDir("graft_remotefn")
     val pq = dir.resolve("r.parquet")
     Seq((1L, "a"), (2L, "b")).toDF("k", "s")
       .write.mode("overwrite").parquet(pq.toString)
@@ -223,7 +223,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("INSERT INTO FUNCTION writes through file()/s3(), PARTITION BY maps to partition dirs") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_insfn")
+    val dir = scratchDir("graft_insfn")
     val out = dir.resolve("w.parquet").toString
     Seq((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "x"))
       .toDF("k", "s", "part").createOrReplaceTempView("graft_wfn_src")
@@ -270,7 +270,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("RowBinaryWithNamesAndTypes round-trips through INTO OUTFILE and file()") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rowbin")
+    val dir = scratchDir("graft_rowbin")
     val out = dir.resolve("t.bin").toString
     spark.sql(
       """SELECT * FROM VALUES
@@ -357,7 +357,7 @@ class CreateFormsSpec extends SparkSpec {
       java.time.LocalDateTime.parse("2000-01-02T03:04:05"),
       new java.math.BigDecimal("18446744073709551615"), null)
     val df = spark.createDataFrame(java.util.Arrays.asList(row), schema)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rowbin_pin")
+    val dir = scratchDir("graft_rowbin_pin")
     val out = dir.resolve("pin.bin")
     graft.sources.RowBinary.write(df, out.toString, "RowBinaryWithNamesAndTypes")
     val hex = java.nio.file.Files.readAllBytes(out)
@@ -388,7 +388,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("LineAsString / JSONAsString / Regexp adopt text files as distributed scans") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_textfmt")
+    val dir = scratchDir("graft_textfmt")
     val log = dir.resolve("app.log")
     java.nio.file.Files.write(log,
       "2024-01-01 INFO start up\n2024-01-02 WARN disk 93\n".getBytes("UTF-8"))
@@ -464,7 +464,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("Template INPUT round-trips what FORMAT Template wrote, reversing each escaping") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tplin")
+    val dir = scratchDir("graft_tplin")
     val rowF = dir.resolve("row.tpl")
     java.nio.file.Files.write(rowF,
       "k=${k:Raw}; s=${s:Quoted}; j=${j:JSON}\n".getBytes("UTF-8"))
@@ -515,7 +515,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("Template Escaped input reverses escapes in one pass (backslash+'n' is not a newline)") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tplesc")
+    val dir = scratchDir("graft_tplesc")
     val rowF = dir.resolve("row.tpl")
     java.nio.file.Files.write(rowF, "v=${s:Escaped}".getBytes("UTF-8"))
     // the r16 advice case: a literal backslash followed by 'n'
@@ -546,7 +546,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("Values adoption refuses expression tokens in the data file") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_valsec")
+    val dir = scratchDir("graft_valsec")
     val f = dir.resolve("evil.values")
     java.nio.file.Files.write(f,
       "(1, version()), (2, 'b')".getBytes("UTF-8"))
@@ -569,7 +569,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("TSKV / JSONCompactEachRow / Values adopt back what their renderers wrote") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_txtrt")
+    val dir = scratchDir("graft_txtrt")
     spark.sql(
       """SELECT * FROM VALUES
         |  (1L, 'alpha', CAST(1.5 AS DOUBLE), true),
@@ -623,7 +623,7 @@ class CreateFormsSpec extends SparkSpec {
       StructField("s", StringType, nullable = true)))
     val df = spark.createDataFrame(
       java.util.Arrays.asList(Row(1L, "a"), Row(2L, null)), schema)
-    val dir = java.nio.file.Files.createTempDirectory("graft_native_pin")
+    val dir = scratchDir("graft_native_pin")
     val out = dir.resolve("pin.native")
     graft.sources.NativeFormat.write(df, out.toString)
     val hex = java.nio.file.Files.readAllBytes(out)
@@ -640,7 +640,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("Native round-trips through INTO OUTFILE and file() (primitives, arrays, UInt64)") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_native")
+    val dir = scratchDir("graft_native")
     val out = dir.resolve("t.native").toString
     spark.sql(
       """SELECT * FROM VALUES
@@ -701,7 +701,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("Native compressed frames: LZ4+CityHash round-trip, auto-detect, corruption check") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_native_lz4")
+    val dir = scratchDir("graft_native_lz4")
     // > 1 MiB of repetitive rows: multiple compressed frames AND a
     // real compression win to assert on
     spark.sql(
@@ -833,7 +833,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("file() reads ORC, Avro and Arrow (registerFormats.cpp adoption formats)") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_filefn2")
+    val dir = scratchDir("graft_filefn2")
     // ORC — Spark's native distributed source
     val orc = dir.resolve("t.orc").toString
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.mode("overwrite").orc(orc)
@@ -894,7 +894,7 @@ class CreateFormsSpec extends SparkSpec {
 
   test("Arrow adoption is a DISTRIBUTED DSv2 scan: batch splits + column pruning") {
     GraftFunctions.ensureRegistered(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_arrow_dist")
+    val dir = scratchDir("graft_arrow_dist")
     val arrowPath = dir.resolve("multi.arrow")
     // 8 record batches of 100 rows each — the footer indexes them,
     // and each becomes its own input split

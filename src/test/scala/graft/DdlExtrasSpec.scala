@@ -130,7 +130,7 @@ class DdlExtrasSpec extends SparkSpec {
       "INSERT INTO graft_bak VALUES (1, 10, 'a'), (1, 11, 'b'), (2, 20, 'c')")
     val before = spark.table("graft_bak")
       .select("p", "k", "v").collect().map(_.toString).sorted.toSeq
-    val dest = java.nio.file.Files.createTempDirectory("graft_backup").toString
+    val dest = scratchDir("graft_backup").toString
     val r = ChDdl.execute(spark, s"BACKUP TABLE graft_bak TO File('$dest')")
     assert(r.select("status").as[String].collect().toSeq == Seq("BACKUP_CREATED"))
     // the same entry can't be backed up twice into one location
@@ -167,7 +167,7 @@ class DdlExtrasSpec extends SparkSpec {
     assert(e2.getMessage.contains("already exists"))
     // INSERT … SELECT FROM file(): the table function composes with
     // the write path (the rewrite runs before statement dispatch)
-    val fdir = java.nio.file.Files.createTempDirectory("graft_filesrc").toString
+    val fdir = scratchDir("graft_filesrc").toString
     spark.table("graft_bak").write.mode("overwrite").parquet(fdir)
     ChDdl.execute(spark,
       s"INSERT INTO graft_bak2 SELECT p, k + 100, v FROM file('$fdir')")

@@ -650,7 +650,7 @@ class DdlSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     spark.sql("SELECT * FROM VALUES (1, 'a'), (2, CAST(NULL AS STRING)) AS t(id, s)")
       .createOrReplaceTempView("graft_of_t")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_outfile")
+    val tmp = scratchDir("graft_outfile")
     val p = tmp.resolve("out.csv")
     ChDdl.execute(spark,
       s"SELECT id, s FROM graft_of_t ORDER BY id INTO OUTFILE '$p' FORMAT CSV")
@@ -836,7 +836,7 @@ class DdlSpec extends SparkSpec {
     assert(p4 == Seq("{\"progress\":{\"read_rows\":\"0\"}}"), p4)
     // Template: row template file with ${col:Escaping} placeholders,
     // resultset file with header/footer around ${data}
-    val dir = java.nio.file.Files.createTempDirectory("graft_tpl")
+    val dir = scratchDir("graft_tpl")
     val rowF = dir.resolve("row.tpl")
     java.nio.file.Files.write(rowF,
       "id=${id:Raw} s=${s:JSON} q=${s:Quoted}\n".getBytes("UTF-8"))
@@ -890,7 +890,7 @@ class DdlSpec extends SparkSpec {
     assert(mdPipe.last == "| a\\|b |", mdPipe)
     // a failed streamed OUTFILE leaves no partial file, so the retry
     // is not blocked by the exists-check
-    val dirF = java.nio.file.Files.createTempDirectory("graft_ofail")
+    val dirF = scratchDir("graft_ofail")
     val pf = dirF.resolve("fail.tsv")
     Seq(pf -> "TSV", dirF.resolve("fail.native") -> "Native").foreach {
       case (p, f) =>
@@ -1459,7 +1459,7 @@ class DdlSpec extends SparkSpec {
       .as[String].head()
     assert(stmt.contains("`id` UInt64"), stmt)
     // RowBinary round trip: 2^64−1 survives the 8-byte codec both ways
-    val dir = java.nio.file.Files.createTempDirectory("graft_u64")
+    val dir = scratchDir("graft_u64")
     val rb = dir.resolve("u.bin").toString
     ChDdl.execute(spark,
       s"SELECT id, tag FROM u64_t INTO OUTFILE '$rb' FORMAT RowBinaryWithNamesAndTypes")

@@ -8,7 +8,7 @@ import graft.functions.{ChDdl, GraftFunctions}
   * the positional-format refusals. */
 class MsgPackSpec extends SparkSpec {
 
-  private lazy val dir = java.nio.file.Files.createTempDirectory("graft_mp")
+  private lazy val dir = scratchDir("graft_mp")
 
   private def bytesOf(p: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))

@@ -373,7 +373,7 @@ class MultimodalSpec extends SparkSpec {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val rgb = Array.tabulate(5 * 3 * 3)(i => (i * 11) % 256)
     val bmp = ImageCodec.encodeBmp(5, 3, rgb)
-    val dir = java.nio.file.Files.createTempDirectory("graft_m01blob")
+    val dir = scratchDir("graft_m01blob")
     val p = dir.resolve("img.bmp")
     java.nio.file.Files.write(p, bmp)
     // RawBLOB is the media-ingest path: whole file → one binary cell

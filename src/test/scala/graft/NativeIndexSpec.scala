@@ -10,7 +10,7 @@ import graft.sources.{NativeFormat, NativeIndex}
 class NativeIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val dir = java.nio.file.Files.createTempDirectory("graft_nidx")
+  private lazy val dir = scratchDir("graft_nidx")
 
   test("sidecar bytes match the reference layout (varuints, strings, LE u64 marks)") {
     val out = dir.resolve("pin.native").toString

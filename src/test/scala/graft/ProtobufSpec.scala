@@ -9,7 +9,7 @@ import graft.functions.{ChDdl, GraftFunctions}
   * RawBLOB whole-file-as-one-value format. */
 class ProtobufSpec extends SparkSpec {
 
-  private lazy val dir = java.nio.file.Files.createTempDirectory("graft_pb")
+  private lazy val dir = scratchDir("graft_pb")
 
   private def writeSchema(name: String, text: String): String = {
     val p = dir.resolve(name)

@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 import graft.sources.Tables
 
@@ -16,46 +14,6 @@ class TablesSpec extends SparkSpec {
 
   private val names = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * events in order, so once a marker job's end is seen every job
-    * `body` started has been counted. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    @volatile var markerDone = false
-    @volatile var markerJob = -1
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("tables.spec") == "body") started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob) markerDone = true
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty("tables.spec", "body")
-      val out = try body finally sc.setLocalProperty("tables.spec", null)
-      sc.setLocalProperty("tables.spec", "marker")
-      try {
-        val f = sc.parallelize(Seq(1), 1).countAsync()
-        markerJob = f.jobIds.head
-        f.get()
-      } finally sc.setLocalProperty("tables.spec", null)
-      val deadline = System.nanoTime() + 10000000000L
-      while (!markerDone && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(markerDone, "listener bus did not drain")
-      (out, started.get)
-    } finally sc.removeSparkListener(l)
-  }
-
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   /** A scratch copy of one single-file parquet table from a Spark
     * write of `sql`. */
@@ -119,7 +77,7 @@ class TablesSpec extends SparkSpec {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     Tables.read(spark, path).schema
     val flipped = spark.conf.get(key, "false") != "true"
-    val (_, jobs) = withConf(key, flipped.toString) {
+    val (_, jobs) = withConf(key -> flipped.toString) {
       jobsDuring(scala.util.Try(Tables.read(spark, path).schema))
     }
     assert(jobs >= 1, "a read under another nanosAsLong value must infer again")
